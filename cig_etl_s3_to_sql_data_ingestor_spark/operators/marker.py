@@ -163,15 +163,6 @@ class JdbcMarkerLedger(MarkerLedger):
         "environment VARCHAR(128)"
     )
 
-    def _write(self, merged: DataFrame) -> None:  # pragma: no cover - unused
-        # Kept for the abstract contract; touch() below upserts via MERGE
-        # and never rewrites the whole table.
-        merged.coalesce(1).write.mode("overwrite").format("jdbc").option(
-            "url", self.url
-        ).option("dbtable", self.table).option("truncate", "true").option(
-            "createTableColumnTypes", self.COLUMN_TYPES
-        ).save()
-
     def _ensure_table(self) -> None:
         from ..sources.jdbc import _TABLE_MISSING_STATES, _sqlstate, read_query
 

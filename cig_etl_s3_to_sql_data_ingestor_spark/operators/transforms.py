@@ -16,16 +16,18 @@ Deliberate reference quirks are reproduced and unit-tested (FIXTURES.md F7):
   (`environment.length` would raise; the working duplicate is
   `main_mailbox.py:56`).
 
-Scale notes: every step is a projection — zero shuffles for the whole
-pipeline; a 100 TB ingest is scan -> map -> sink. T7/T8 are the only
-two-pass steps (a column-stat aggregate gates a rewrite); the gate is one
-tiny extra job whose result is folded into the plan as a literal, exactly
-like the reference's pandas pre-scan, and both passes still read the
-pruned column set only.
+Scale notes: `clean_pipeline` composes every target column's expression
+once and returns ONE projection — zero shuffles for the whole pipeline; a
+100 TB ingest is scan -> map -> sink. The T7 and T8 column-wide gates
+(like the reference's pandas pre-scans) are computed together in one
+aggregate over the source, whose booleans fold into the projection as
+plan choices; a table with no nullable int and no datetime column runs
+no gate job at all.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from datetime import date
 
 from pyspark.sql import Column, DataFrame
@@ -96,83 +98,17 @@ def materialize_null(col: Column) -> Column:
     return F.when(col == "None", F.lit(None).cast("string")).otherwise(col)
 
 
+def truncate_timestamp(col: Column) -> Column:
+    """T8 rewrite: keep the first 23 characters (yyyy-MM-dd HH:mm:ss.SSS)."""
+    return F.substring(col, 1, TIMESTAMP_MAX_LEN)
+
+
+ODD_COLUMNS = {"Geolocation": "POINT (0 0)", "Logo": "None", "Picture": "None"}
+
+
 # ---------------------------------------------------------------------------
-# Frame-level steps
+# Frame-level plans
 # ---------------------------------------------------------------------------
-
-
-def add_audit_columns(df: DataFrame, environment: str, ingestion_date: date) -> DataFrame:
-    """T1+T2+T3: Environment / CIGCopyTime / CIGProcessed constants."""
-    return (
-        df.withColumn("Environment", F.lit(derive_environment_value(environment)))
-        .withColumn("CIGCopyTime", F.lit(ingestion_date.strftime("%Y-%m-%d")))
-        .withColumn("CIGProcessed", F.lit("0"))
-    )
-
-
-def replace_sentinels(df: DataFrame) -> DataFrame:
-    """T4 over every string column (the reference's frame-wide replace).
-
-    One ``withColumns`` projection, NOT a per-column ``withColumn`` loop:
-    chained withColumn stacks one Project node per column, and analyzing
-    427 stacked projections of 427 fields is quadratic in width — the
-    difference between milliseconds and minutes of planning on the
-    DivisionStatistics-shaped tables."""
-    updates = {
-        f_.name: sentinel_replace(F.col(f_.name))
-        for f_ in df.schema.fields
-        if f_.dataType.simpleString() == "string"
-    }
-    return df.withColumns(updates) if updates else df
-
-
-def default_missing_columns(df: DataFrame, table: TableSpec) -> DataFrame:
-    """T5: reflected target columns absent from the frame appear as 'None'."""
-    missing = [c for c in table.column_names if c not in df.columns]
-    return df.withColumns({c: F.lit("None") for c in missing}) if missing else df
-
-
-def normalize_nullable_ints(df: DataFrame, table: TableSpec) -> DataFrame:
-    """T6 for every nullable int column."""
-    cols = [c.name for c in table.columns_of_type("int", nullable=True) if c.name in df.columns]
-    return df.withColumns({c: strip_decimal_suffix(F.col(c)) for c in cols}) if cols else df
-
-
-def normalize_sci_notation(df: DataFrame, table: TableSpec) -> DataFrame:
-    """T7: gated per column on 'any value contains e-/e+' (A4), then the
-    whole column is passed through float parsing.
-
-    The gate is computed in ONE aggregate job over all candidate columns
-    (the reference does a pandas pre-scan per column); the rewrite itself
-    is `normalize_int_string` — see its docstring for the documented
-    deviation from Python float repr.
-    """
-    cols = [c.name for c in table.columns_of_type("int", nullable=True) if c.name in df.columns]
-    if not cols:
-        return df
-    gates = df.agg(
-        *[
-            F.max(
-                F.col(c).contains("e-") | F.col(c).contains("e+")
-            ).alias(c)
-            for c in cols
-        ]
-    ).first()
-    hit = [c for c in cols if gates[c]]
-    return df.withColumns({c: normalize_int_string(F.col(c)) for c in hit}) if hit else df
-
-
-def scrub_not_nullable(df: DataFrame, table: TableSpec) -> DataFrame:
-    """T9 for every non-nullable target column (creates missing ones as '').
-
-    Single ``withColumns`` projection — see replace_sentinels for why a
-    withColumn loop is quadratic in table width."""
-    cols = [c.name for c in table.columns if not c.nullable]
-    updates = {
-        c: not_nullable_scrub(F.col(c) if c in df.columns else F.lit(""))
-        for c in cols
-    }
-    return df.withColumns(updates) if updates else df
 
 
 def truncate_long_timestamps(
@@ -191,37 +127,9 @@ def truncate_long_timestamps(
     updates = {}
     for c in present:
         maxlen = gates[c] or 0
-        val = F.substring(F.col(c), 1, TIMESTAMP_MAX_LEN) if maxlen > TIMESTAMP_MAX_LEN else F.col(c)
+        val = truncate_timestamp(F.col(c)) if maxlen > TIMESTAMP_MAX_LEN else F.col(c)
         updates[c + out_suffix] = val
     return df.withColumns(updates)
-
-
-def truncate_timestamps_for_table(df: DataFrame, table: TableSpec) -> DataFrame:
-    return truncate_long_timestamps(df, [c.name for c in table.columns_of_type("datetime")])
-
-
-def truncate_nvarchar_max(df: DataFrame, table: TableSpec) -> DataFrame:
-    """T10 for str columns with no declared length."""
-    cols = [
-        c.name
-        for c in table.columns
-        if c.ctype == "str" and c.length is None and c.name in df.columns
-    ]
-    return df.withColumns({c: truncate_nvarchar(F.col(c)) for c in cols}) if cols else df
-
-
-ODD_COLUMNS = {"Geolocation": "POINT (0 0)", "Logo": "None", "Picture": "None"}
-
-
-def neutralize_odd_columns(df: DataFrame) -> DataFrame:
-    """T11: geography/binary columns pinned to constants (reference :120-128)."""
-    updates = {c: F.lit(v) for c, v in ODD_COLUMNS.items() if c in df.columns}
-    return df.withColumns(updates) if updates else df
-
-
-def ordered_projection(df: DataFrame, table: TableSpec) -> DataFrame:
-    """P1: exactly the configured columns, in configured order."""
-    return df.select(*table.column_names)
 
 
 def materialize_nulls(df: DataFrame) -> DataFrame:
@@ -237,16 +145,51 @@ def materialize_nulls(df: DataFrame) -> DataFrame:
 def clean_pipeline(
     df: DataFrame, table: TableSpec, environment: str, ingestion_date: date
 ) -> DataFrame:
-    """The full reference pipeline in the reference's call order
-    (`CigEolHostingIngestionLogic.py:32-41`), ending with the ordered
-    projection (P1). T12 is applied separately by the sink."""
-    df = add_audit_columns(df, environment, ingestion_date)  # T1-T3
-    df = replace_sentinels(df)  # T4
-    df = default_missing_columns(df, table)  # T5
-    df = normalize_nullable_ints(df, table)  # T6
-    df = normalize_sci_notation(df, table)  # T7
-    df = scrub_not_nullable(df, table)  # T9
-    df = truncate_timestamps_for_table(df, table)  # T8
-    df = truncate_nvarchar_max(df, table)  # T10
-    df = neutralize_odd_columns(df)  # T11
-    return ordered_projection(df, table)  # P1
+    """T1-T11 plus the ordered projection P1 as ONE ``select``: each
+    target column's expression is composed once, in the reference's call
+    order (`CigEolHostingIngestionLogic.py:32-41`). T12 is applied
+    separately by the sink.
+
+    The column-wide gates of T7 (nullable ints, any value containing
+    ``e-``/``e+`` after T6) and T8 (datetimes, max length > 23 after T9)
+    are computed in ONE aggregate job. A gated rewrite is always the
+    column's last step before T11: T7 and T9 never share a column
+    (nullable vs not), and T10 applies to str columns only."""
+    types = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
+    audit = {  # T1-T3
+        "Environment": derive_environment_value(environment),
+        "CIGCopyTime": ingestion_date.strftime("%Y-%m-%d"),
+        "CIGProcessed": "0",
+    }
+    exprs: list[Column] = []
+    gated: list[tuple[int, Column, Callable[[Column], Column]]] = []  # (index, gate, rewrite)
+    for i, c in enumerate(table.columns):
+        if c.name in ODD_COLUMNS:  # T11 overrides every earlier step
+            exprs.append(F.lit(ODD_COLUMNS[c.name]))
+            continue
+        if c.name in audit:
+            col = sentinel_replace(F.lit(audit[c.name]))  # T4
+        elif c.name in types:
+            col = F.col(c.name)
+            if types[c.name] == "string":
+                col = sentinel_replace(col)  # T4
+        else:
+            col = F.lit("None")  # T5
+        if c.ctype == "int" and c.nullable:
+            col = strip_decimal_suffix(col)  # T6
+            t7_gate = F.max(col.contains("e-") | col.contains("e+"))
+            gated.append((i, t7_gate, normalize_int_string))  # T7
+        if not c.nullable:
+            col = not_nullable_scrub(col)  # T9
+        if c.ctype == "datetime":
+            t8_gate = F.max(F.length(col)) > TIMESTAMP_MAX_LEN
+            gated.append((i, t8_gate, truncate_timestamp))  # T8
+        if c.ctype == "str" and c.length is None:
+            col = truncate_nvarchar(col)  # T10
+        exprs.append(col)
+    if gated:
+        hits = df.agg(*[g.alias(f"g{k}") for k, (_, g, _) in enumerate(gated)]).first()
+        for k, (i, _, rewrite) in enumerate(gated):
+            if hits[k]:
+                exprs[i] = rewrite(exprs[i])
+    return df.select(*[e.alias(n) for e, n in zip(exprs, table.column_names)])  # P1

@@ -128,13 +128,16 @@ class BatchIngest:
                 g.min_date,
                 g.max_date,
             )
-            survivors = (
-                wl.filter(
-                    (F.col("environment") == env)
-                    & (F.col("data_source") == data_source)
-                    & (F.col("target_table") == target)
-                )
-                .select(norm_path(F.col("full_path")).alias("_wl_path"))
+            # The group's files: read below, then marked done after the
+            # sink commit. Both use this one filter, so a group never marks
+            # another data source's files that share its environment.
+            in_group = (
+                (F.col("environment") == env)
+                & (F.col("data_source") == data_source)
+                & (F.col("target_table") == target)
+            )
+            survivors = wl.filter(in_group).select(
+                norm_path(F.col("full_path")).alias("_wl_path")
             )
             df = (
                 self.spark.read.parquet(*day_dirs)
@@ -166,11 +169,8 @@ class BatchIngest:
                 # across every historical run.
                 n_rows = final.count()
                 final.write.mode("append").parquet(out_path)
-            completed = (
-                wl.filter(
-                    (F.col("environment") == env) & (F.col("target_table") == target)
-                )
-                .select("file_name", "environment", "target_table", "backup_date")
+            completed = wl.filter(in_group).select(
+                "file_name", "environment", "target_table", "backup_date"
             )
             ledger.touch(completed)
             self.results.append(

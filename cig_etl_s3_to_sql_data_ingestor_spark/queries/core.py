@@ -252,9 +252,10 @@ def env_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # T8: timestamp millisecond truncation, gated on the column-wide max string
-# length (`CigEolHostingIngestionLogic.py:92-104`). The pipeline version
-# uses a separate tiny aggregate job for the gate; here the gate is an
-# unpartitioned window max, expressible identically in the oracle.
+# length (`CigEolHostingIngestionLogic.py:92-104`). The gate is one small
+# aggregate job whose result folds into the projection as a plan choice
+# (the ingest pipeline computes it in the same aggregate as the T7 gate);
+# the oracle expresses it as a scalar subquery.
 @register(
     "timestamp_truncation",
     oracle="""

@@ -159,6 +159,44 @@ def test_mailbox_layout_environment_derivation(spark, tmp_path):
     assert row.entity_name == "Msgs"
 
 
+def test_mailbox_group_marks_only_its_own_data_source(spark, tmp_path):
+    """Two mailbox data sources share one environment (NL_A, NL_B -> NL).
+    The NL_A group must not mark NL_B's files as done: when NL_B's group
+    fails, the re-run has to pick its files up again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "mb")
+
+    def day_dir(source):
+        path = os.path.join(root, source, "Widgets", "2024", "01", "05")
+        os.makedirs(path, exist_ok=True)
+        return path
+
+    pq.write_table(
+        pa.table({"ID": ["a"], "Name": ["x"]}), os.path.join(day_dir("NL_A"), "a.parquet")
+    )
+    broken = os.path.join(day_dir("NL_B"), "b.parquet")
+    with open(broken, "wb") as fh:
+        fh.write(b"not a parquet file")
+    ingest = BatchIngest(
+        spark,
+        {"Widgets": SPEC},
+        sink_root=str(tmp_path / "sink"),
+        marker_path=str(tmp_path / "marker"),
+        layout="mailbox",
+    )
+    with pytest.raises(Exception):
+        ingest.run(root, dt.date(2024, 1, 5))
+
+    os.remove(broken)
+    pq.write_table(pa.table({"ID": ["b"], "Name": ["y"]}), broken)
+    again = ingest.run(root, dt.date(2024, 1, 5))
+    assert [(r.target_table, r.n_files) for r in again] == [("HOST_CIG_Widgets", 1)]
+    sunk = spark.read.parquet(again[0].sink_path)
+    assert sorted(r["ID"] for r in sunk.collect()) == ["a", "b"]
+
+
 def test_freshness_monitor_tiers(spark, tree):
     files = discover_files(spark, tree, "hosting")
     ref = dt.date(2024, 1, 6)

@@ -78,7 +78,7 @@ def test_t7_sci_notation_gate(spark):
     df = spark.createDataFrame(
         [("1.801439850948301e+16", "12"), ("None", "34")], "a string, b string"
     )
-    out = TR.normalize_sci_notation(df, spec)
+    out = TR.clean_pipeline(df, spec, "NL", dt.date(2024, 1, 5))
     rows = {tuple(r) for r in out.collect()}
     # column a gated in (sci value present) → integer-text normalize;
     # column b untouched (no e+/e- anywhere)
@@ -140,7 +140,7 @@ def test_t9_not_nullable_created_as_empty(spark):
         "T", "t", columns=(ColumnSpec("Req", "str", False), ColumnSpec("Opt", "str", True))
     )
     df = spark.createDataFrame([("x",)], "Opt string")
-    out = TR.scrub_not_nullable(df, spec)
+    out = TR.clean_pipeline(df, spec, "NL", dt.date(2024, 1, 5))
     assert out.select("Req").first()[0] == ""
 
 

@@ -9,11 +9,14 @@ the batch), keeping runtime sane.
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from cig_etl_s3_to_sql_data_ingestor_spark.catalog import ColumnSpec, TableSpec
 from cig_etl_s3_to_sql_data_ingestor_spark.operators import transforms as TR
 
 SETTINGS = settings(
@@ -112,6 +115,115 @@ def test_normalize_int_string_matches_model(spark, values):
     got = run_column(spark, values, TR.normalize_int_string)
     want = [model_normalize_int(v) for v in values]
     assert got == want
+
+
+# --- The whole clean pipeline (T1-T11 + P1) vs a frame-by-frame model ---
+
+INGESTION_DATE = dt.date(2024, 1, 5)
+AUDIT = ("Environment", "CIGCopyTime", "CIGProcessed")
+ODD = {"Geolocation": "POINT (0 0)", "Logo": "None", "Picture": "None"}
+
+int_cells = st.one_of(
+    st.integers(-999, 999).map(str),
+    st.integers(-999, 999).map(lambda i: f"{i}.0"),
+    # "2e.0+1.0" holds "e+" only after T6 strips its ".0"s
+    st.sampled_from(["1.014.0", "2e.0+1.0", "None", "nan", "True", "x", ""]),
+    st.none(),
+)
+sci_cells = st.builds(  # any one of these turns the T7 gate on
+    lambda m, sign, k: f"{m}e{sign}{k}",
+    st.sampled_from(["1", "2.5", "-7", "1.0"]),
+    st.sampled_from("+-"),
+    st.integers(0, 6),
+)
+ts_cells = st.one_of(
+    st.sampled_from(["2019-07-03 12:34:56", "2019-07-03 12:34:56.123", "NaT", ""]),
+    st.lists(fragments, max_size=6).map("".join),
+    st.none(),
+)
+# Over 23 characters: turns the T8 gate on, unless T9 scrubs the 'None's
+# out of a non-nullable column first.
+long_ts_cells = st.sampled_from(
+    ["2019-07-03 12:34:56.1234567", "NoneNoneNoneNoneNoneNone"]
+)
+
+
+@st.composite
+def clean_cases(draw):
+    """A small target table, a source frame of string columns (some
+    target columns missing, one extra) and the run's environment."""
+    n_rows = draw(st.integers(0, 6))
+    specs, source = [], {}
+    for i in range(draw(st.integers(1, 5))):
+        ctype = draw(st.sampled_from(["str", "int", "datetime"]))
+        length = draw(st.sampled_from([255, None])) if ctype == "str" else 255
+        spec = ColumnSpec(f"c{i}", ctype, draw(st.booleans()), length)
+        specs.append(spec)
+        if ctype == "int":
+            values = st.one_of(int_cells, sci_cells) if draw(st.booleans()) else int_cells
+        elif ctype == "datetime":
+            values = st.one_of(ts_cells, long_ts_cells) if draw(st.booleans()) else ts_cells
+        else:
+            values = cells
+        if draw(st.integers(0, 3)):  # else missing from the source (T5)
+            source[spec.name] = draw(st.lists(values, min_size=n_rows, max_size=n_rows))
+    source["extra"] = draw(st.lists(cells, min_size=n_rows, max_size=n_rows))
+    if draw(st.booleans()):
+        source["Geolocation"] = draw(st.lists(cells, min_size=n_rows, max_size=n_rows))
+        specs.append(ColumnSpec("Geolocation", "str", True))
+    if draw(st.booleans()):
+        for name in AUDIT:
+            specs.insert(draw(st.integers(0, len(specs))), ColumnSpec(name, "str", True))
+    env = draw(st.sampled_from(["NL_Hosting_Mailbox", "NL", "UAT", "nan_Hosting", "True_X"]))
+    return specs, source, n_rows, env
+
+
+def model_clean(specs, source, n_rows, env):
+    """The reference's step order (`CigEolHostingIngestionLogic.py:32-41`),
+    one column-wide step after another, on plain Python lists."""
+    frame = {name: list(vals) for name, vals in source.items()}
+    frame["Environment"] = [model_env(env)] * n_rows  # T1
+    frame["CIGCopyTime"] = [INGESTION_DATE.strftime("%Y-%m-%d")] * n_rows  # T2
+    frame["CIGProcessed"] = ["0"] * n_rows  # T3
+    frame = {name: [model_sentinel(v) for v in vals] for name, vals in frame.items()}  # T4
+    for c in specs:
+        frame.setdefault(c.name, ["None"] * n_rows)  # T5
+    for c in specs:
+        if c.ctype == "int" and c.nullable:
+            frame[c.name] = [model_strip_decimal(v) for v in frame[c.name]]  # T6
+    for c in specs:
+        if c.ctype == "int" and c.nullable and any(
+            v is not None and ("e-" in v or "e+" in v) for v in frame[c.name]
+        ):
+            frame[c.name] = [model_normalize_int(v) for v in frame[c.name]]  # T7
+    for c in specs:
+        if not c.nullable:
+            frame[c.name] = [model_scrub(v) for v in frame[c.name]]  # T9
+    for c in specs:
+        if c.ctype == "datetime" and max(
+            (len(v) for v in frame[c.name] if v is not None), default=0
+        ) > 23:
+            frame[c.name] = [v if v is None else v[:23] for v in frame[c.name]]  # T8
+    for c in specs:
+        if c.ctype == "str" and c.length is None:
+            frame[c.name] = [v if v is None else v[:100_000] for v in frame[c.name]]  # T10
+    for name, const in ODD.items():
+        if name in frame:
+            frame[name] = [const] * n_rows  # T11
+    return [tuple(frame[c.name][r] for c in specs) for r in range(n_rows)]  # P1
+
+
+@SETTINGS
+@given(case=clean_cases())
+def test_clean_pipeline_matches_model(spark, case):
+    specs, source, n_rows, env = case
+    table = TableSpec("T", "t", columns=tuple(specs))
+    df = spark.createDataFrame(
+        list(zip(*source.values())), ", ".join(f"{n} string" for n in source)
+    )
+    out = TR.clean_pipeline(df, table, env, INGESTION_DATE)
+    assert out.columns == table.column_names
+    assert [tuple(r) for r in out.collect()] == model_clean(specs, source, n_rows, env)
 
 
 @st.composite

@@ -87,13 +87,39 @@ def test_wide_table_clean_pipeline_and_jdbc(spark, tmp_path):
     assert elapsed < 180, f"wide-table pipeline took {elapsed:.0f}s"
 
 
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 def test_wide_table_plan_stays_single_stage(spark):
     """The clean pipeline at 427 columns must remain a pure projection
     over the scan — no shuffle introduced by width, and a plan that
-    Catalyst can still analyze/optimize in bounded time."""
+    Catalyst can still analyze/optimize in bounded time. Its T7 and T8
+    gates share ONE aggregate: building the plan launches exactly the
+    jobs of a single ``df.agg(...).first()`` over the same frame."""
     spec = _wide_spec()
-    df = _wide_frame(spark)
-    cleaned = TR.clean_pipeline(stringify(df), spec, "NL", dt.date(2024, 1, 5))
+    df = stringify(_wide_frame(spark))
+    start = _next_job_id(spark)
+    cleaned = TR.clean_pipeline(df, spec, "NL", dt.date(2024, 1, 5))
+    clean_jobs = _next_job_id(spark) - start
+    start = _next_job_id(spark)
+    df.agg(F.max(F.length("C001")), F.max(F.length("C002"))).first()
+    assert clean_jobs == _next_job_id(spark) - start, "more than one gate scan"
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = cleaned._jdf.queryExecution().explainString(mode)
     assert "Exchange" not in plan, "width introduced a shuffle"
+
+
+def test_wide_table_without_gated_columns_launches_no_job(spark):
+    """No nullable int and no datetime column means no T7/T8 gate: the
+    clean plan is built without running any Spark job."""
+    ungated = tuple(
+        c for c in _wide_spec().columns
+        if c.ctype == "str" or (c.ctype == "int" and not c.nullable)
+    )
+    spec = TableSpec(target_name="HOST_CIG_Ungated", source="Ungated", columns=ungated)
+    df = stringify(_wide_frame(spark))
+    start = _next_job_id(spark)
+    cleaned = TR.clean_pipeline(df, spec, "NL", dt.date(2024, 1, 5))
+    assert _next_job_id(spark) - start == 0
+    assert cleaned.columns == spec.column_names
