@@ -672,7 +672,6 @@ def main_corpus(argv: list[str] | None = None) -> int:
         # published EXACTLY-ONCE in waves (crash-resumable — rerunning
         # this entry after a mid-write death completes only the missing
         # shards; a completed run is a no-op).
-        from .operators.dedup import unpersist_all
         from .plans.corpus_pipeline import write_training_shards
 
         out = write_training_shards(
@@ -684,7 +683,6 @@ def main_corpus(argv: list[str] | None = None) -> int:
             bin_budget=int(cfg_json.get("bin_budget", 256)),
             shards_per_commit=int(cfg_json.get("shards_per_commit", 4)),
         )
-        unpersist_all()
         print(_json.dumps({"shards": out}))
         return 0
     chunks, stats = prepare_corpus(

@@ -25,6 +25,8 @@ portable across engines.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -70,6 +72,27 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def _local_checkpoint(df: DataFrame) -> DataFrame:
+    """localCheckpoint() + registration for deferred release: the
+    checkpoint's blocks live in a persisted RDD that nothing else frees
+    until the driver's garbage collector happens to run."""
+    df = df.localCheckpoint()
+    _PERSISTED.append(df)
+    return df
+
+
+def _release(df: DataFrame) -> None:
+    # blocking=True: the default async release races any caller (or
+    # test) that counts persistent RDDs right afterwards.
+    try:
+        df.unpersist(blocking=True)
+        plan = df._jdf.logicalPlan()
+        if plan.nodeName() == "LogicalRDD":  # a local checkpoint
+            plan.rdd().unpersist(True)
+    except Exception:
+        pass
+
+
 def unpersist_all() -> None:
     """Release every intermediate frame persisted by the dedup operators.
 
@@ -79,12 +102,23 @@ def unpersist_all() -> None:
     long-lived session must call this (or ``spark.catalog.clearCache()``)
     after consuming results; bench.py clears the cache per query."""
     while _PERSISTED:
-        try:
-            # blocking=True: the default async release races any caller
-            # (or test) that counts persistent RDDs right afterwards.
-            _PERSISTED.pop().unpersist(blocking=True)
-        except Exception:
-            pass
+        _release(_PERSISTED.pop())
+
+
+@contextlib.contextmanager
+def released_on_exit():
+    """Release, when the block exits, the frames the dedup operators
+    persist inside it — and only those. Frames registered before the
+    block stay cached: other callers in the session may still hold
+    them, which is why a scoped caller must not use ``unpersist_all``."""
+    mark = len(_PERSISTED)
+    try:
+        yield
+    finally:
+        added = _PERSISTED[mark:]
+        del _PERSISTED[mark:]
+        for df in reversed(added):
+            _release(df)
 
 
 def tokens_col(text_col: str = "text"):
@@ -533,15 +567,16 @@ def connected_components(
     diameter) distributed rounds, each one join + one aggregate keyed by
     vertex (LSH dedup components are shallow, so a handful of rounds).
     ``localCheckpoint`` cuts lineage each round so plans don't grow
-    exponentially. Only vertices that appear in a pair are returned
-    (singletons aren't duplicates of anything).
+    exponentially; the checkpoints are registered for release like the
+    other operators' persisted frames. Only vertices that appear in a
+    pair are returned (singletons aren't duplicates of anything).
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
+    edges = _local_checkpoint(edges)
     labels = edges.select(F.col("src").alias("vertex")).distinct().select(
         "vertex", F.col("vertex").alias("label")
     )
@@ -557,14 +592,13 @@ def connected_components(
         )
         # The changed flag rides along through the checkpoint so
         # convergence detection needs no second join over the labels.
-        new_labels = (
+        new_labels = _local_checkpoint(
             labels.join(neighbor_min, labels.vertex == neighbor_min.src, "left")
             .select(
                 "vertex",
                 new_label.alias("label"),
                 (new_label != F.col("label")).alias("_changed"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")

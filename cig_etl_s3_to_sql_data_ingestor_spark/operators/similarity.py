@@ -232,6 +232,10 @@ def ivf_assign(
     payload is deterministic; min/max/sort over the per-row (sim,
     cell_id) structs are order-independent anyway (cell ids are
     distinct, so the order is total).
+
+    Precondition: ``id_col`` is unique in ``corpus``. The projection
+    emits one assignment per input ROW, so a duplicated id gets one
+    assignment per copy (the old per-id aggregate collapsed them).
     """
     c = fan_out(corpus).select(
         F.col(id_col).alias("cand_id"),
@@ -951,7 +955,13 @@ def pq_encode(
     projection over the subvector frame — no row explosion, no
     aggregate, no exchange (the earlier exploded min_by spelling paid a
     corpus-sized (sid, m) exchange here; guide §2.4). Values are
-    bit-identical: same l2sq folds, same (d2, code_id) tie-break."""
+    bit-identical: same l2sq folds, same (d2, code_id) tie-break.
+
+    Precondition: ``id_col`` is unique in ``corpus``. A duplicated id
+    gets one code per copy and subspace (the old per-(sid, m) aggregate
+    collapsed them), and :func:`pq_topk`'s ADC sum over (query_id,
+    cand_id) then adds the copies' distances, inflating that id's
+    distance."""
     if subs is None:
         subs = _subvectors(fan_out(corpus), n_sub, id_col, vec_col)
     return subs.join(F.broadcast(_codebook_arrays(codebooks)), "m").select(

@@ -27,6 +27,12 @@ Protocol (minimal Delta-log shape):
 Readers (:func:`read_snapshot`) load the union of listed batch dirs —
 a consistent snapshot regardless of concurrent publishes.
 
+A commit may carry a small JSON ``info`` record of its own (the analog
+of Delta's commitInfo/txn action): a writer states what it published,
+e.g. the plan a resumable job ran, and :func:`latest_info` hands that
+record to the next run before it reads any data. ``info`` belongs to
+one version only; later commits do not inherit it.
+
 Recovery story (crashed or in-flight commits): a writer that wins the
 ``create`` claim but dies before writing/closing the manifest leaves a
 claimed-but-unparsable ``v{N}.json``. Such a version is UNCOMMITTED:
@@ -147,23 +153,40 @@ def current_version(spark: SparkSession, table_path: str) -> int:
     return _latest_committed(fs, jvm, table_path)[0]
 
 
+def latest_info(spark: SparkSession, table_path: str) -> tuple[int, dict | None]:
+    """(version, info) of the latest COMMITTED version — the ``info``
+    record its writer passed to :func:`write_snapshot`, or None when it
+    passed none; (0, None) when nothing is committed. Dead claims are
+    skipped as in :func:`current_version`. Reads one manifest; no
+    Spark job."""
+    fs, jvm = _fs(spark, table_path)
+    v, m = _latest_committed(fs, jvm, table_path.rstrip("/"))
+    return v, (m.get("info") if m is not None else None)
+
+
 def write_snapshot(
     df: DataFrame,
     table_path: str,
     mode: str = "append",
     max_retries: int = 10,
+    info: dict | None = None,
 ) -> int:
     """Publish ``df`` as a new table version; returns the version number.
 
     ``append`` adds this batch to the current snapshot; ``overwrite``
     makes the new snapshot exactly this batch. The data write happens
     once — only the (tiny) manifest commit retries under contention.
+    ``info`` (JSON-serializable) is stored in this version's manifest
+    and read back by :func:`latest_info`; a rebase keeps it, a later
+    commit does not inherit it.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unsupported mode {mode!r}")
     spark = df.sparkSession
     table_path = table_path.rstrip("/")
     batch = f"data/batch-{uuid.uuid4().hex}"
+    # Serialize up front: a non-JSON info must fail before any data lands.
+    info_json = {} if info is None else {"info": json.loads(json.dumps(info))}
     df.write.parquet(f"{table_path}/{batch}")
     fs, jvm = _fs(spark, table_path)
     last_exc: Exception | None = None
@@ -209,7 +232,12 @@ def write_snapshot(
         try:
             out.write(
                 json.dumps(
-                    {"version": target_v, "mode": mode, "batches": batches}
+                    {
+                        "version": target_v,
+                        "mode": mode,
+                        "batches": batches,
+                        **info_json,
+                    }
                 ).encode("utf-8")
             )
         finally:
@@ -275,7 +303,10 @@ def write_snapshot(
 
 
 def read_snapshot(
-    spark: SparkSession, table_path: str, version: int | None = None
+    spark: SparkSession,
+    table_path: str,
+    version: int | None = None,
+    schema: str | None = None,
 ) -> DataFrame:
     """Consistent snapshot at ``version`` (default: latest). Only batch
     directories listed by that manifest are read — in-flight or orphaned
@@ -288,7 +319,11 @@ def read_snapshot(
     on which file Spark happens to sample first. Incompatible type
     changes for the same column name fail the read loudly (Spark's
     merge error), which is the correct behavior for an uncoordinated
-    type flip."""
+    type flip.
+
+    ``schema`` (a DDL string such as ``"shard_id long"``) reads only
+    those columns with the caller's types and skips the footer merge,
+    which is a Spark job of its own."""
     table_path = table_path.rstrip("/")
     fs, jvm = _fs(spark, table_path)
     if version is None:
@@ -297,9 +332,10 @@ def read_snapshot(
             raise FileNotFoundError(f"no committed snapshot in {table_path}")
     else:
         v, m = version, _read_manifest(fs, jvm, table_path, version)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[f"{table_path}/{b}" for b in m["batches"]]
-    )
+    reader = spark.read.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*[f"{table_path}/{b}" for b in m["batches"]])
 
 
 def vacuum(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cig_etl_s3_to_sql_data_ingestor_spark.io import load_table
@@ -229,8 +230,16 @@ def test_write_training_shards_crash_between_waves_resumes(
         }
         assert 0 < len(partial) <= 3
 
+        # The recorded plan matches but shards are missing: the resume
+        # takes the full path and writes exactly the missing shards.
+        calls = _spy_prepare(monkeypatch, cpl)
+        waves = _record_waves(monkeypatch, ms)
         out = cpl.write_training_shards(docs, table, n_shards=8, shards_per_commit=3)
         assert out["skipped_shards"] == len(partial)
+        assert calls == [1]
+        written = [s for wave in waves for s in wave]
+        assert len(written) == len(set(written)) == out["written_shards"]
+        assert not set(written) & partial
 
         # Complete, no duplicates (write_training_shards' verify pass
         # already raised if not; assert independently anyway).
@@ -246,6 +255,214 @@ def test_write_training_shards_crash_between_waves_resumes(
         n_before = snap.count()
         assert ms.vacuum(spark, table, retention_seconds=0.0) >= 1
         assert ms.read_snapshot(spark, table).count() == n_before
+    finally:
+        unpersist_all()
+
+
+def test_content_digests_ignore_order_and_partitioning(spark):
+    """The plan fingerprint's input digest depends on the rows alone:
+    not on their order or partitioning, but on every value, the row
+    multiplicity and the schema; a map column is hashed too."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.plans.corpus_pipeline import (
+        content_digests,
+    )
+
+    rows = [(i, f"text {i}", {"k": i}) for i in range(20)]
+    schema = "doc_id long, text string, meta map<string,int>"
+    df = spark.createDataFrame(rows, schema)
+    shuffled = spark.createDataFrame(list(reversed(rows)), schema).repartition(5)
+    longer = spark.createDataFrame([(0, "text 0 more", {"k": 0})] + rows[1:], schema)
+    doubled = spark.createDataFrame(rows + rows[:1], schema)
+    retyped = df.withColumn("doc_id", F.col("doc_id").cast("int"))
+    d = content_digests(
+        {"a": df, "b": shuffled, "c": longer, "d": doubled, "e": retyped, "f": df.limit(0)}
+    )
+    assert d["a"] == d["b"]
+    assert d["a"]["rows"] == 20 and d["d"]["rows"] == 21
+    for other in "cde":
+        assert d[other] != d["a"]
+    assert d["c"]["xxhash64_sum"] != d["a"]["xxhash64_sum"]
+    assert d["c"]["md5_sum"] != d["a"]["md5_sum"]
+    assert d["f"] == {**d["a"], "rows": 0, "xxhash64_sum": "0", "md5_sum": "0"}
+
+
+def _spy_prepare(monkeypatch, cpl) -> list:
+    """Count calls of ``corpus_pipeline.prepare_corpus``."""
+    calls: list = []
+    real = cpl.prepare_corpus
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cpl, "prepare_corpus", spy)
+    return calls
+
+
+def _record_waves(monkeypatch, ms) -> list:
+    """The shard ids of every batch ``write_snapshot`` commits."""
+    waves: list = []
+    real = ms.write_snapshot
+
+    def recording(df, *args, **kwargs):
+        waves.append(sorted(r[0] for r in df.select("shard_id").distinct().collect()))
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(ms, "write_snapshot", recording)
+    return waves
+
+
+def _jobs_started(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _cached(spark) -> tuple[int, int]:
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators import dedup
+
+    return len(dedup._PERSISTED), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture(scope="module")
+def finished_shards(spark, sf_dir, tmp_path_factory):
+    """A finished 8-shard publish of the test documents; tests that
+    change the table work on a copy."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.plans import corpus_pipeline as cpl
+
+    docs = load_table(spark, sf_dir, "documents")
+    table = str(tmp_path_factory.mktemp("finished") / "shards")
+    out = cpl.write_training_shards(docs, table, n_shards=8, shards_per_commit=3)
+    return docs, table, out
+
+
+def _recomputed_counts_differ(spark, docs, table, n_shards) -> bool:
+    """Whether the full path's recomputed per-shard counts differ from
+    the finished table's — what makes its verify raise when, as in the
+    cases here, no shard is missing."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators import corpus_prep as cp
+    from cig_etl_s3_to_sql_data_ingestor_spark.sources import manifest_sink as ms
+
+    def counts(df):
+        return dict(df.groupBy("shard_id").count().collect())
+
+    chunks, _ = prepare_corpus(docs)
+    want = counts(cp.shard_pack_assignments(chunks, n_shards=n_shards))
+    unpersist_all()
+    snap = counts(ms.read_snapshot(spark, table))
+    assert want.keys() <= snap.keys()
+    return want != snap
+
+
+def test_write_training_shards_rerun_on_finished_table_skips_lineage(
+    spark, finished_shards, monkeypatch
+):
+    """A re-run of the same plan on a finished table checks the plan
+    recorded in the manifest and the snapshot's per-shard counts: it
+    never recomputes the lineage, launches a handful of Spark jobs, and
+    returns what the full path returns."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.plans import corpus_pipeline as cpl
+    from cig_etl_s3_to_sql_data_ingestor_spark.sources import manifest_sink as ms
+
+    docs, table, out = finished_shards
+    v = ms.current_version(spark, table)
+    calls = _spy_prepare(monkeypatch, cpl)
+    jobs0 = _jobs_started(spark)
+    again = cpl.write_training_shards(docs, table, n_shards=8, shards_per_commit=3)
+    assert _jobs_started(spark) - jobs0 <= 6
+    assert calls == []
+    assert again == {
+        "written_shards": 0,
+        "skipped_shards": out["written_shards"],
+        "rows": out["rows"],
+    }
+    assert ms.current_version(spark, table) == v
+
+
+@pytest.mark.parametrize("change", ["longer_text", "fewer_shards"])
+def test_write_training_shards_changed_plan_takes_full_path(
+    spark, finished_shards, monkeypatch, change
+):
+    """A changed input or shard count never passes for a finished run:
+    the lineage is recomputed and the result is the full path's — here
+    the verify error, as the recomputed counts disagree with the table."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.plans import corpus_pipeline as cpl
+    from cig_etl_s3_to_sql_data_ingestor_spark.sources import manifest_sink as ms
+
+    docs, table, _ = finished_shards
+    n_shards = 8
+    if change == "longer_text":
+        # One surviving document, one token longer per chunk it had.
+        doc_id, n = (
+            ms.read_snapshot(spark, table)
+            .groupBy("doc_id")
+            .count()
+            .orderBy(F.desc("count"), "doc_id")
+            .first()
+        )
+        pad = " ".join(f"padword{i}" for i in range(32 * n))
+        docs = docs.withColumn(
+            "text",
+            F.when(F.col("doc_id") == doc_id, F.concat_ws(" ", "text", F.lit(pad)))
+            .otherwise(F.col("text")),
+        )
+    else:
+        n_shards = 6
+    assert _recomputed_counts_differ(spark, docs, table, n_shards)
+    v = ms.current_version(spark, table)
+    calls = _spy_prepare(monkeypatch, cpl)
+    try:
+        with pytest.raises(RuntimeError, match="training-shard verify failed"):
+            cpl.write_training_shards(
+                docs, table, n_shards=n_shards, shards_per_commit=3
+            )
+    finally:
+        unpersist_all()
+    assert calls == [1]
+    assert ms.current_version(spark, table) == v
+
+
+def test_write_training_shards_duplicate_batch_of_same_plan_fails_verify(
+    spark, finished_shards, tmp_path, monkeypatch
+):
+    """A concurrent writer of the same plan that commits one shard again
+    (with the same recorded plan) leaves counts that disagree with the
+    record: the re-run raises the verify error without the lineage."""
+    import shutil
+
+    from cig_etl_s3_to_sql_data_ingestor_spark.plans import corpus_pipeline as cpl
+    from cig_etl_s3_to_sql_data_ingestor_spark.sources import manifest_sink as ms
+
+    docs, finished, _ = finished_shards
+    table = str(tmp_path / "shards")
+    shutil.copytree(finished, table)
+    _, info = ms.latest_info(spark, table)
+    snap = ms.read_snapshot(spark, table)
+    shard = snap.select(F.min("shard_id")).first()[0]
+    ms.write_snapshot(snap.filter(F.col("shard_id") == shard), table, info=info)
+    calls = _spy_prepare(monkeypatch, cpl)
+    with pytest.raises(RuntimeError, match="training-shard verify failed"):
+        cpl.write_training_shards(docs, table, n_shards=8, shards_per_commit=3)
+    assert calls == []
+
+
+def test_write_training_shards_releases_its_caches(spark, sf_dir, tmp_path):
+    """A publish and a resume leave the session's caches as they found
+    them: the frames the dedup operators persisted for the lineage
+    (including connected_components' checkpoints) and the assignment are
+    released, and frames registered before the call stay cached."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators import dedup
+    from cig_etl_s3_to_sql_data_ingestor_spark.plans import corpus_pipeline as cpl
+
+    docs = load_table(spark, sf_dir, "documents")
+    table = str(tmp_path / "shards")
+    held = dedup._persist(spark.range(10))
+    held.count()
+    try:
+        before = _cached(spark)
+        cpl.write_training_shards(docs, table, n_shards=8, shards_per_commit=3)
+        assert _cached(spark) == before
+        cpl.write_training_shards(docs, table, n_shards=8, shards_per_commit=3)
+        assert _cached(spark) == before
+        assert held.is_cached and dedup._PERSISTED[-1] is held
     finally:
         unpersist_all()
 

@@ -262,3 +262,63 @@ def test_snapshot_schema_evolution_is_additive(spark, tmp_path):
     snap2 = M.read_snapshot(spark, t)
     assert set(snap2.columns) == {"id", "extra"}
     assert {r.id: r.extra for r in snap2.collect()}[200] is None
+
+
+def test_commit_info_round_trips_per_version(spark, tmp_path):
+    """``info`` is stored in its own version's manifest only: it reads
+    back intact, a commit without one reads None, and a later append
+    does not inherit the earlier record."""
+    t = str(tmp_path / "tbl")
+    assert M.latest_info(spark, t) == (0, None)
+    record = {"plan": {"n": 3, "cfg": {"x": 0.4, "y": None}}, "rows": {"0": 7}}
+    v1 = M.write_snapshot(spark.range(0, 5), t, info=record)
+    assert M.latest_info(spark, t) == (v1, record)
+    v2 = M.write_snapshot(spark.range(5, 9), t, mode="append")
+    assert M.latest_info(spark, t) == (v2, None)
+    v3 = M.write_snapshot(spark.range(9, 10), t, mode="append", info={"k": 1})
+    assert M.latest_info(spark, t) == (v3, {"k": 1})
+
+
+def test_commit_without_info_reads_none(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    M.write_snapshot(spark.range(0, 5), t)
+    assert M.latest_info(spark, t) == (1, None)
+
+
+def test_non_json_info_fails_before_data_lands(spark, tmp_path):
+    t = tmp_path / "tbl"
+    with pytest.raises(TypeError, match="JSON serializable"):
+        M.write_snapshot(spark.range(0, 5), str(t), info={"bad": {1, 2}})
+    assert not t.exists()
+
+
+def test_latest_info_skips_dead_claim(spark, tmp_path):
+    """A claimed-but-unparsable newest manifest is uncommitted: the
+    reader returns the info of the newest COMMITTED version below it."""
+    t = str(tmp_path / "tbl")
+    M.write_snapshot(spark.range(0, 5), t, info={"who": "v1"})
+    (tmp_path / "tbl" / "_manifests" / "v2.json").write_text("")
+    assert M.latest_info(spark, t) == (1, {"who": "v1"})
+
+
+def test_read_and_vacuum_ignore_info(spark, tmp_path):
+    """The info key changes neither what a snapshot reads nor what
+    vacuum keeps."""
+    t = str(tmp_path / "tbl")
+    M.write_snapshot(spark.range(0, 10), t, info={"a": [1, 2]})
+    M.write_snapshot(spark.range(10, 12), t, mode="append", info={"b": True})
+    orphan = tmp_path / "tbl" / "data" / "batch-deadbeef"
+    spark.range(100, 200).write.parquet(str(orphan))
+    assert sorted(r.id for r in M.read_snapshot(spark, t).collect()) == list(range(12))
+    assert M.read_snapshot(spark, t, version=1).count() == 10
+    assert M.vacuum(spark, t, retention_seconds=-1.0) == 1
+    assert not orphan.exists()
+    assert M.read_snapshot(spark, t).count() == 12
+
+
+def test_read_snapshot_with_schema_reads_only_those_columns(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    M.write_snapshot(spark.range(0, 4).selectExpr("id", "id % 2 AS shard_id"), t)
+    snap = M.read_snapshot(spark, t, schema="shard_id long")
+    assert snap.columns == ["shard_id"]
+    assert sorted(r.shard_id for r in snap.collect()) == [0, 0, 1, 1]
