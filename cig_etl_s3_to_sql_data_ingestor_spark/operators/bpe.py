@@ -45,7 +45,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import tokens_col
+from .dedup import _local_checkpoint, tokens_col
 
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -193,18 +193,21 @@ def bpe_train_plan(
     agg over the vocabulary-bounded symbol frame), a 1-row TakeOrdered
     argmax broadcast back, and a literal ``replace``. ``localCheckpoint``
     cuts lineage per step (dedup.connected_components precedent) so the
-    plan stays linear in ``n_merges``. This form exists for bounded
+    plan stays linear in ``n_merges``; ``dedup.unpersist_all`` frees the
+    checkpoints. This form exists for bounded
     vocabularies and the differential gate; the 100 TB trainer is
     :func:`train_bpe` (driver-side over the capped aggregate)."""
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)),
     )
-    w = wc_df.select(
-        "word",
-        "n",
-        F.concat(F.lit(" "), F.concat_ws(" ", chars), F.lit(" ")).alias("syms"),
-    ).localCheckpoint()
+    w = _local_checkpoint(
+        wc_df.select(
+            "word",
+            "n",
+            F.concat(F.lit(" "), F.concat_ws(" ", chars), F.lit(" ")).alias("syms"),
+        )
+    )
 
     rows: list[DataFrame] = []
     for step in range(1, n_merges + 1):
@@ -230,7 +233,7 @@ def bpe_train_plan(
             # would crossJoin w against an EMPTY best and silently wipe
             # the whole vocabulary frame (review finding).
             break
-        w = (
+        w = _local_checkpoint(
             w.crossJoin(F.broadcast(best.select(F.col("pair").alias("bp"))))
             .withColumn(
                 "syms",
@@ -245,7 +248,6 @@ def bpe_train_plan(
                 ),
             )
             .drop("bp")
-            .localCheckpoint()
         )
         after = w.agg(
             F.sum(F.col("n") * F.size(F.split(F.trim(F.col("syms")), " ")))

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _local_checkpoint
+
 PR_BASE = 1_000_000  # micro-rank units
 PR_DAMPING = 0.85
 # The teleport term as ONE Python-evaluated double literal shared with
@@ -85,7 +87,9 @@ def undirected_pagerank(
     on executors without lineage, so on a real cluster an executor loss
     mid-computation fails the job (not silently recomputed) — swap in
     reliable ``checkpoint()`` with a checkpoint dir if executor churn
-    is expected at your scale.
+    is expected at your scale. The checkpoints are registered with the
+    dedup operators' intermediates: ``dedup.unpersist_all`` frees them
+    (call it after consuming the result).
     """
     if tol is not None and not checkpoint_every:
         raise ValueError(
@@ -101,7 +105,7 @@ def undirected_pagerank(
     if checkpoint_every:
         # Reused by every iteration's join — checkpoint once so each
         # round re-reads materialized edges instead of re-deriving them.
-        both = both.localCheckpoint()
+        both = _local_checkpoint(both)
     deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ranks = deg.select("u", F.lit(PR_BASE).cast("long").alias("pr"))
     for it in range(n_iters):
@@ -128,7 +132,7 @@ def undirected_pagerank(
             .alias("pr"),
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            new_ranks = new_ranks.localCheckpoint()
+            new_ranks = _local_checkpoint(new_ranks)
         if tol is not None:
             delta = (
                 new_ranks.select("u", F.col("pr").alias("_new"))

@@ -6,15 +6,20 @@ backup_date, inserted_date. Logical dedup key is the TRIPLE
 (parquet_source, environment, target_table) — backup_date is
 deliberately NOT part of it (`CustomMarkerTable.py:35-38,53-57`): a
 same-named file re-delivered on a later date counts as already ingested.
+Known limit, inherited from the reference: data_source is not in the
+key, so two mailbox data sources that share an environment and a file
+name share one marker (fixing it changes the F4 schema).
 
-Two operations, both DataFrame-shaped:
+Operations, all DataFrame-shaped:
 - ``select_work``: anti-join the candidate work-list against the ledger
   (J4). The ledger is tiny relative to the corpus → broadcast.
-- ``touch``: upsert completed work into the ledger. With a parquet
-  backend the upsert is implemented as (existing ∪ new).dropDuplicates
-  over the key — atomic-rename rewrite of a small table; with a JDBC
-  backend it would be MERGE. On Delta/Iceberg this becomes a real MERGE
-  INTO; the protocol is identical.
+- ``touch``: record completed work. JDBC upserts by a staged MERGE (the
+  reference's row-level upsert); parquet APPENDS one file, never
+  rewriting the ledger, so a key may sit in several files until
+  ``compact`` — ``select_work`` and ``exists`` only ask for presence.
+- ``ParquetMarkerLedger.compact``: fold the files into one, then delete
+  exactly the files it read. A crash anywhere leaves at worst duplicate
+  keys (the same key set); it never deletes a file it did not read.
 """
 
 from __future__ import annotations
@@ -45,7 +50,7 @@ class MarkerLedger:
     def read(self) -> DataFrame:  # pragma: no cover - abstract
         raise NotImplementedError
 
-    def _write(self, merged: DataFrame) -> None:  # pragma: no cover - abstract
+    def _write(self, new: DataFrame) -> None:  # pragma: no cover - abstract
         raise NotImplementedError
 
     def exists(self, parquet_source: str, environment: str, target_table: str) -> bool:
@@ -71,22 +76,16 @@ class MarkerLedger:
         )
 
     def touch(self, completed: DataFrame) -> None:
-        """Upsert completed rows (keyed on the triple; latest wins)."""
-        new = completed.select(
-            F.col("file_name").alias("parquet_source"),
-            F.col("target_table"),
-            F.col("environment"),
-            F.col("backup_date").cast("date"),
-            F.current_timestamp().alias("inserted_date"),
+        """Record completed rows (keyed on the triple; latest wins)."""
+        self._write(
+            completed.select(
+                F.col("file_name").alias("parquet_source"),
+                F.col("target_table"),
+                F.col("environment"),
+                F.col("backup_date").cast("date"),
+                F.current_timestamp().alias("inserted_date"),
+            )
         )
-        merged = (
-            new.unionByName(self.read())
-            # dropDuplicates keeps the first occurrence -> new rows win,
-            # mirroring the reference's insert-or-update (:26-44).
-            .dropDuplicates(MARKER_KEY)
-            .localCheckpoint()  # cut lineage before overwriting the source
-        )
-        self._write(merged)
 
 
 class ParquetMarkerLedger(MarkerLedger):
@@ -97,11 +96,9 @@ class ParquetMarkerLedger(MarkerLedger):
         self.path = path
 
     def read(self) -> DataFrame:
-        # Only "the ledger does not exist yet" maps to an empty frame. A
-        # blanket except here would be a data-loss bug: touch() merges
-        # read() with the new rows and OVERWRITES the ledger, so treating
-        # a transient/corrupt read as empty would silently truncate the
-        # ingestion history (and re-ingest everything later).
+        # Only "the ledger does not exist yet" maps to an empty frame: a
+        # transient/corrupt read treated as empty would make select_work
+        # re-ingest every file into an append-only sink.
         from pyspark.errors import AnalysisException
 
         try:
@@ -111,8 +108,33 @@ class ParquetMarkerLedger(MarkerLedger):
                 return self.spark.createDataFrame([], MARKER_SCHEMA)
             raise
 
-    def _write(self, merged: DataFrame) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(self.path)
+    def _write(self, new: DataFrame) -> None:
+        new.coalesce(1).write.mode("append").parquet(self.path)
+
+    def compact(self) -> None:
+        """Fold the ledger's files into one, keeping per key the row with
+        the latest ``inserted_date`` (as the JDBC upsert does)."""
+        from ..fsutil import hadoop_fs
+
+        fs, jvm = hadoop_fs(self.spark, self.path)
+        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        files = [
+            st.getPath()
+            for st in (fs.listStatus(root) if fs.exists(root) else [])
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        ]
+        if len(files) < 2:
+            return
+        self._write(
+            self.spark.read.schema(MARKER_SCHEMA)
+            .parquet(*[p.toString() for p in files])
+            .coalesce(1)  # one task and no shuffle: the output is one file
+            .groupBy(*MARKER_KEY)
+            .agg(F.max(F.struct("inserted_date", "backup_date")).alias("m"))
+            .select(*MARKER_KEY, "m.*")
+        )
+        for p in files:
+            fs.delete(p, False)
 
 
 class JdbcMarkerLedger(MarkerLedger):
@@ -122,12 +144,10 @@ class JdbcMarkerLedger(MarkerLedger):
     that.
 
     ``touch`` is a real MERGE upsert (stage the new rows, one
-    transactional ``MERGE INTO`` keyed on the triple): unlike the
-    parquet backend's read-merge-overwrite, concurrent writers ingesting
-    different file sets serialize on row locks and BOTH sets survive —
-    a truncate-rewrite would let the last writer erase the other's rows.
-    Derby (>= 10.11), SQL Server, and Postgres (15+) all speak this
-    MERGE dialect.
+    transactional ``MERGE INTO`` keyed on the triple): concurrent
+    writers ingesting different file sets serialize on row locks and
+    BOTH sets survive. Derby (>= 10.11), SQL Server, and Postgres (15+)
+    all speak this MERGE dialect.
     """
 
     def __init__(self, spark: SparkSession, url: str, table: str = "etl_marker"):
@@ -139,7 +159,7 @@ class JdbcMarkerLedger(MarkerLedger):
         from ..sources.jdbc import _TABLE_MISSING_STATES, _sqlstate, read_query
 
         # Same contract as the parquet backend: only "table absent" is
-        # empty; any other failure propagates so touch() cannot truncate.
+        # empty; any other failure propagates.
         try:
             df = read_query(self.spark, self.url, f"SELECT * FROM {self.table}")
         except Exception as ex:
@@ -181,22 +201,12 @@ class JdbcMarkerLedger(MarkerLedger):
             "dbtable", self.table
         ).option("createTableColumnTypes", self.COLUMN_TYPES).save()
 
-    def touch(self, completed: DataFrame) -> None:
+    def _write(self, new: DataFrame) -> None:
         """Upsert via staged MERGE — safe under concurrent writers."""
         import uuid
 
-        new = (
-            completed.select(
-                F.col("file_name").alias("parquet_source"),
-                F.col("target_table"),
-                F.col("environment"),
-                F.col("backup_date").cast("date"),
-                F.current_timestamp().alias("inserted_date"),
-            )
-            # MERGE requires a unique source per target row; latest wins
-            # within the batch like the base protocol.
-            .dropDuplicates(MARKER_KEY)
-        )
+        # MERGE requires a unique source row per target row.
+        new = new.dropDuplicates(MARKER_KEY)
         self._ensure_table()
         staging = f"{self.table}_stg_{uuid.uuid4().hex[:8]}"
         new.coalesce(1).write.mode("overwrite").format("jdbc").option(

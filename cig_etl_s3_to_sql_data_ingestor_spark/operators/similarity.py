@@ -1639,7 +1639,8 @@ def mmr_rerank(
     localCheckpointed every round (it feeds TWO branches of the next
     round, which would otherwise double the plan tree per round) — so
     the rounds execute eagerly at call time, the same documented trade
-    as ``undirected_pagerank``.
+    as ``undirected_pagerank``; ``dedup.unpersist_all`` frees the
+    checkpoints.
 
     All scoring is IEEE-deterministic for the oracle: relevance is the
     shared cosine fold, MAX over doubles is order-independent, and the
@@ -1667,7 +1668,7 @@ def mmr_rerank(
     )
     # The shortlist feeds every round: persist it (|Q| x shortlist rows,
     # bounded) so the exact scoring pass runs once, not k times.
-    from .dedup import _persist
+    from .dedup import _local_checkpoint, _persist
 
     scored = _persist(scored)
     if k < 1:
@@ -1699,7 +1700,7 @@ def mmr_rerank(
     # materialized picks (<= |Q| rows per round) — the same bounded-plan
     # trade as undirected_pagerank: rounds execute EAGERLY at call time
     # and are not recomputable on executor loss.
-    out = picked.localCheckpoint()
+    out = _local_checkpoint(picked)
     for step in range(2, k + 1):
         sel = out.select(
             "query_id",
@@ -1742,7 +1743,7 @@ def mmr_rerank(
                 "cand_norm",
             )
         )
-        out = out.unionByName(pick).localCheckpoint()
+        out = _local_checkpoint(out.unionByName(pick))
     return out.select("query_id", "cand_id", "mmr_score", "rank")
 
 

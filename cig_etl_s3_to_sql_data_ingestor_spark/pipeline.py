@@ -3,7 +3,7 @@ reference's `main.py` lifecycle (SURVEY.md §3.1).
 
     discover (S2/S3) → work-list plan (P2-P6, J4) → per-group:
     read parquet (S1) → stringify → clean T1-T11 + P1 → T12 →
-    sink (parquet or JDBC) → marker touch
+    sink (parquet or JDBC) → marker touch; one ledger compaction per run
 
 Differences from the reference, by design:
 - one Spark job per (environment, entity) group instead of one OS
@@ -11,8 +11,9 @@ Differences from the reference, by design:
   workers, and small files coalesce into sane partitions automatically;
 - the transform is a column-expression pipeline (whole-stage codegen),
   not per-cell pandas lambdas;
-- idempotency = marker anti-join before the read + marker upsert after
-  the sink commit (the reference's exists()/touch() protocol).
+- idempotency = marker anti-join before the read + an append-only
+  marker commit after the sink commit (the reference's exists()/touch()
+  protocol), never a rewrite of the ledger.
 """
 
 from __future__ import annotations
@@ -102,7 +103,7 @@ class BatchIngest:
             source_col="environment" if self.layout == "hosting" else "data_source",
         )
         # Freeze the work-list before any marker mutation: the anti-join
-        # reads the ledger, which ledger.touch() rewrites inside the loop.
+        # reads the ledger, to which ledger.touch() appends in the loop.
         wl = wl.cache()
         wl.count()
         by_source = {t.target_name: t for t in self.catalog.values()}
@@ -111,14 +112,11 @@ class BatchIngest:
             env, data_source, target = g.environment, g.data_source, g.target_table
             table = by_source[target]
             # Read-path push-down: the group descriptor bounds the scan to
-            # its date-ranged day directories (O(days) driver metadata,
-            # never a per-file path list), then the file-level survivors
-            # (marker anti-join J4, debug filter P9) are enforced by a
-            # DISTRIBUTED semi-join on input_file_name — the work-list
-            # stays a DataFrame end-to-end, so a 10M-file tree never
-            # materializes on the driver. AQE broadcasts the survivor
-            # side while it is small and falls back to a shuffle join
-            # when it isn't.
+            # its date-ranged day directories (O(days) driver metadata),
+            # then a DISTRIBUTED semi-join on input_file_name keeps the
+            # file-level survivors (J4, P9), so no per-file path list ever
+            # reaches the driver; AQE broadcasts the survivor side while
+            # it is small and falls back to a shuffle join when it isn't.
             day_dirs = group_day_dirs(
                 self.spark,
                 data_root,
@@ -156,18 +154,16 @@ class BatchIngest:
                 stringify(df), table, data_source, ingestion_date
             )
             final = TR.materialize_nulls(cleaned)  # T12 at the sink boundary
+            # THIS run's rows: re-reading the sink after the append would
+            # report the total across every historical run.
+            n_rows = final.count()
             if self.jdbc_url is not None:
                 from .sources.jdbc import write_table
 
                 write_table(final, self.jdbc_url, target)
                 out_path = f"{self.jdbc_url}::{target}"
-                n_rows = final.count()
             else:
                 out_path = os.path.join(self.sink_root, target, f"environment={env}")
-                # Count THIS run's rows before appending — re-reading the
-                # sink after the append would report the cumulative total
-                # across every historical run.
-                n_rows = final.count()
                 final.write.mode("append").parquet(out_path)
             completed = wl.filter(in_group).select(
                 "file_name", "environment", "target_table", "backup_date"
@@ -176,6 +172,8 @@ class BatchIngest:
             self.results.append(
                 IngestResult(env, target, g.n_files, n_rows, out_path)
             )
+        if self.results:
+            ledger.compact()
         wl.unpersist()
         return self.results
 
@@ -242,24 +240,15 @@ class BatchIngest:
                     "key_column is exclusive with partition_column/"
                     "predicates"
                 )
-            table = (
-                # Double cast: JDBC-written string columns are CLOBs on some
-            # dialects (Derby), and CLOB->BIGINT is not a legal cast
-            # there — CLOB->VARCHAR->BIGINT is.
-            f"(SELECT t.*, CAST(CAST({key_column} AS VARCHAR(128)) "
-            f"AS BIGINT) AS pb_stride "
-                f"FROM {target} t) v"
+            table = (  # CLOB->BIGINT is illegal on Derby; via VARCHAR it is not
+                f"(SELECT t.*, CAST(CAST({key_column} AS VARCHAR(128)) "
+                f"AS BIGINT) AS pb_stride FROM {target} t) v"
             )
             partition_column = "pb_stride"
         elif partition_column is None and predicates is None:
-            # Auto-pick must consult the SINK's JDBC schema, not
-            # ``expected``'s: the ingest stringifies every column, so a
-            # source-side integral column is typically VARCHAR/CLOB in
-            # the table — striding on it would crash the MIN/MAX probe
-            # (Derby raises on MIN over CLOB) and fail Spark's
-            # numeric-partition-column validation, instead of the
-            # documented single-connection fallback. One WHERE 1=0
-            # round-trip reflects the remote types.
+            # Auto-pick from the SINK's schema (one WHERE 1=0 round-trip):
+            # a stringified source-side int is VARCHAR/CLOB there, and
+            # striding on it would crash the MIN/MAX probe.
             sink_schema = (
                 self.spark.read.format("jdbc")
                 .option("url", self.jdbc_url)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import TableSpec
-from ..operators.marker import ParquetMarkerLedger
+from ..operators.marker import MarkerLedger
 
 
 def config_frame(spark: SparkSession, catalog: dict[str, TableSpec]) -> DataFrame:
@@ -38,7 +38,7 @@ def build_worklist(
     config: DataFrame,
     ingestion_date: dt.date,
     environments: list[str] | None = None,
-    ledger: ParquetMarkerLedger | None = None,
+    ledger: MarkerLedger | None = None,
     file_name: str | None = None,
     source_col: str = "environment",
 ) -> DataFrame:

@@ -339,6 +339,39 @@ def test_pagerank_convergence_mode_bounded_lineage(spark):
     assert len(p6_lazy) > 3 * len(p12), (len(p6_lazy), len(p12))
 
 
+def test_loop_checkpoints_released_by_unpersist_all(spark):
+    """PageRank's and the BPE trainer's per-round localCheckpoints are
+    registered like the dedup intermediates, so unpersist_all frees
+    them. Compared by RDD id, which a concurrent ContextCleaner release
+    of an unrelated RDD cannot fake."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators.bpe import (
+        bpe_train_plan,
+        word_counts,
+    )
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators.graph import (
+        undirected_pagerank,
+    )
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    D.unpersist_all()
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 12) for i in range(30)], ["src", "dst"]
+    )
+    before = persistent_ids()
+    undirected_pagerank(edges, n_iters=12, checkpoint_every=3).collect()
+    assert persistent_ids() - before, "the checkpoints must exist until released"
+    D.unpersist_all()
+    assert not persistent_ids() - before
+
+    docs = spark.createDataFrame([("low lower lowest newer",)], ["text"])
+    steps, encoded = bpe_train_plan(spark, word_counts(docs), 3)
+    encoded.collect()
+    D.unpersist_all()
+    assert not persistent_ids() - before
+
+
 def test_source_overlap_hot_shingle_cap(spark):
     """A universal (boilerplate) shingle must be droppable from the
     intersection index via max_shingle_df, while per-source set sizes

@@ -94,10 +94,19 @@ def test_batch_ingest_jdbc_sink(spark, tmp_path, url):
     assert n == 3, "idempotency violated: rerun double-inserted rows"
 
 
-def test_jdbc_marker_ledger(spark, url):
-    from cig_etl_s3_to_sql_data_ingestor_spark.operators.marker import JdbcMarkerLedger
+@pytest.mark.parametrize("backend", ["jdbc", "parquet"])
+def test_jdbc_marker_ledger(spark, url, tmp_path, backend):
+    """One marker contract for both backends: the JDBC MERGE upsert and
+    the parquet append + compaction leave the same ledger."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators.marker import (
+        JdbcMarkerLedger,
+        ParquetMarkerLedger,
+    )
 
-    ledger = JdbcMarkerLedger(spark, url, table="etl_marker")
+    if backend == "jdbc":
+        ledger = JdbcMarkerLedger(spark, url, table="etl_marker")
+    else:
+        ledger = ParquetMarkerLedger(spark, str(tmp_path / "marker"))
     assert ledger.read().count() == 0
     assert not ledger.exists("f1.parquet", "NL", "T1")
 
@@ -118,6 +127,8 @@ def test_jdbc_marker_ledger(spark, url):
         "file_name string, environment string, target_table string, backup_date date",
     )
     ledger.touch(completed2)
+    if backend == "parquet":
+        ledger.compact()
     m = ledger.read()
     assert m.count() == 2
     # Latest touch wins on the re-delivered key.

@@ -105,6 +105,33 @@ def test_batch_ingest_prunes_and_is_idempotent(spark, tree, tmp_path):
     assert spark.read.parquet(r.sink_path).count() == 3
 
 
+def test_batch_ingest_compacts_ledger_once_per_run(spark, tree, tmp_path):
+    """Every group appends its markers; the run then folds the ledger
+    into one file, and a run with nothing to ingest leaves it alone."""
+    marker = str(tmp_path / "marker")
+    ingest = BatchIngest(
+        spark=spark,
+        catalog={"Widgets": SPEC, "Off": DISABLED},
+        sink_root=str(tmp_path / "sink"),
+        marker_path=marker,
+    )
+    results = ingest.run(tree, dt.date(2024, 1, 4))
+    assert len(results) == 2  # one group per environment
+
+    def data_files():
+        return [f for f in os.listdir(marker) if not f.startswith(("_", "."))]
+
+    assert len(data_files()) == 1
+    m = ParquetMarkerLedger(spark, marker).read()
+    keys = {tuple(r) for r in m.select("parquet_source", "environment").collect()}
+    assert keys == {("w1.parquet", "NL"), ("old.parquet", "NL"), ("w2.parquet", "DE")}
+    assert m.count() == 3
+
+    listing = sorted(os.listdir(marker))
+    assert ingest.run(tree, dt.date(2024, 1, 4)) == []
+    assert sorted(os.listdir(marker)) == listing
+
+
 def test_work_groups_are_bounded_descriptors(spark, tree):
     """The driver must never hold per-file path lists: a work group is a
     fixed-size descriptor (counts + date range), and the group's day
