@@ -51,6 +51,7 @@ webhook when anything is stale.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import datetime as dt
 import json
 import os
@@ -319,26 +320,14 @@ def main_stream(argv: list[str] | None = None) -> int:
         from .operators.dedup import unpersist_all
         from .streaming.dedup_ingest import DedupIngest
 
-        allowed = {
-            "mode", "source_glob", "max_files_per_trigger",
-            "store_path", "sink_path", "checkpoint_path", "id_col",
-            "text_col", "num_hashes", "band_size", "threshold",
-            "shingle_n", "cdc_store_path", "cdc_k", "cdc_divisor",
-            "cdc_min_chunks", "cosine_store_path", "cosine_ngram",
-            "cosine_rare_prefix", "cosine_max_term_df", "cosine_num",
-            "cosine_den", "cosine_n_buckets", "tile_store_path",
-            "tile_k", "cdc_n_buckets", "tile_n_buckets",
-            "embedding_store_path", "embedding_centroids_path",
-            "embedding_col", "embedding_threshold",
-            "embedding_sq8_stats_path",
-        }
-        unknown = set(cfg) - allowed
+        run_keys = {"mode", "source_glob", "max_files_per_trigger"}
+        allowed = {f.name for f in dataclasses.fields(DedupIngest)} - {"spark"}
+        unknown = set(cfg) - allowed - run_keys
         if unknown:
             raise ValueError(f"unknown dedup stream-config keys: {sorted(unknown)}")
         ingest = DedupIngest(
             spark,
-            **{k: v for k, v in cfg.items()
-               if k not in ("mode", "source_glob", "max_files_per_trigger")},
+            **{k: v for k, v in cfg.items() if k not in run_keys},
         )
         fields = [
             T.StructField(ingest.id_col, T.LongType()),

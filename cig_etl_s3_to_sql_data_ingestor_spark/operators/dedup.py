@@ -27,17 +27,20 @@ from __future__ import annotations
 
 import contextlib
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out
 
-# Strong references on purpose: the JVM-side cache outlives the Python
-# handle (a weakref would be dead by the time anyone could release it),
-# and a DataFrame handle is a few driver-side objects — the leak being
-# fixed is the cached JVM partitions, not the handles.
-_PERSISTED: list[DataFrame] = []
+# Persisted frames are held strongly: the CacheManager pins their
+# partitions whether or not Python still holds the handle, so the handle
+# is what lets anyone release them. Local checkpoints are held by RDD id
+# only: SparkContext tracks persisted RDDs weakly, so a checkpoint no
+# frame reads any more is freed by garbage collection, and holding the
+# frame here would keep every checkpoint of a long session alive.
+_PERSISTED: list[DataFrame | int] = []
 
 _LONG_MAX = (1 << 63) - 1
 
@@ -73,22 +76,25 @@ def _persist(df: DataFrame) -> DataFrame:
 
 
 def _local_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint() + registration for deferred release: the
-    checkpoint's blocks live in a persisted RDD that nothing else frees
-    until the driver's garbage collector happens to run."""
+    """localCheckpoint() + registration, by RDD id, for deferred release:
+    otherwise the checkpoint's blocks stay until the driver's garbage
+    collector happens to run."""
     df = df.localCheckpoint()
-    _PERSISTED.append(df)
+    _PERSISTED.append(df._jdf.logicalPlan().rdd().id())
     return df
 
 
-def _release(df: DataFrame) -> None:
+def _release(entry: DataFrame | int) -> None:
     # blocking=True: the default async release races any caller (or
     # test) that counts persistent RDDs right afterwards.
     try:
-        df.unpersist(blocking=True)
-        plan = df._jdf.logicalPlan()
-        if plan.nodeName() == "LogicalRDD":  # a local checkpoint
-            plan.rdd().unpersist(True)
+        if isinstance(entry, int):
+            sc = SparkContext._active_spark_context
+            rdd = sc._jsc.getPersistentRDDs().get(entry) if sc else None
+            if rdd is not None:  # None: already freed by garbage collection
+                rdd.unpersist(True)
+        else:
+            entry.unpersist(blocking=True)
     except Exception:
         pass
 
@@ -99,8 +105,9 @@ def unpersist_all() -> None:
     The operators persist intermediates (signatures, inverted indexes)
     that feed multiple plan branches of the frame they RETURN — they
     cannot unpersist before the caller materializes that frame, so a
-    long-lived session must call this (or ``spark.catalog.clearCache()``)
-    after consuming results; bench.py clears the cache per query."""
+    long-lived session must call this after consuming results.
+    ``spark.catalog.clearCache()`` is no substitute: it drops persisted
+    frames but not local checkpoints."""
     while _PERSISTED:
         _release(_PERSISTED.pop())
 

@@ -117,14 +117,14 @@ def zorder_snapshot(
     time-travelable until vacuumed."""
     import math as _math
 
+    from ..fsutil import hadoop_fs
     from ..sources.manifest_sink import (
-        _fs,
         _latest_committed,
         read_snapshot,
         write_snapshot,
     )
 
-    fs, jvm = _fs(spark, table_path)
+    fs, jvm = hadoop_fs(spark, table_path)
     _, manifest = _latest_committed(fs, jvm, table_path.rstrip("/"))
     if manifest is None:
         return 0

@@ -55,6 +55,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fsutil import hadoop_fs
+
 MANIFEST_DIR = "_manifests"
 # Seconds an unparsable NEWEST manifest is re-polled before a writer
 # treats the claim as dead and commits above it.
@@ -65,12 +67,6 @@ MANIFEST_DIR = "_manifests"
 # and the post-write verification in write_snapshot turns any remaining
 # race from silent data loss into a loud error the caller can retry.
 CLAIM_GRACE_SECONDS = 30.0
-
-
-def _fs(spark: SparkSession, path: str):
-    from ..fsutil import hadoop_fs
-
-    return hadoop_fs(spark, path)
 
 
 def _manifest_path(jvm, table_path: str, version: int):
@@ -149,7 +145,7 @@ def _latest_committed(fs, jvm, table_path: str) -> tuple[int, dict | None]:
 def current_version(spark: SparkSession, table_path: str) -> int:
     """Latest COMMITTED (parsable) manifest version, or 0 when the table
     has none; dead claims are skipped."""
-    fs, jvm = _fs(spark, table_path)
+    fs, jvm = hadoop_fs(spark, table_path)
     return _latest_committed(fs, jvm, table_path)[0]
 
 
@@ -159,7 +155,7 @@ def latest_info(spark: SparkSession, table_path: str) -> tuple[int, dict | None]
     passed none; (0, None) when nothing is committed. Dead claims are
     skipped as in :func:`current_version`. Reads one manifest; no
     Spark job."""
-    fs, jvm = _fs(spark, table_path)
+    fs, jvm = hadoop_fs(spark, table_path)
     v, m = _latest_committed(fs, jvm, table_path.rstrip("/"))
     return v, (m.get("info") if m is not None else None)
 
@@ -188,7 +184,7 @@ def write_snapshot(
     # Serialize up front: a non-JSON info must fail before any data lands.
     info_json = {} if info is None else {"info": json.loads(json.dumps(info))}
     df.write.parquet(f"{table_path}/{batch}")
-    fs, jvm = _fs(spark, table_path)
+    fs, jvm = hadoop_fs(spark, table_path)
     last_exc: Exception | None = None
     for _ in range(max_retries):
         committed_v, manifest = _latest_committed(fs, jvm, table_path)
@@ -325,7 +321,7 @@ def read_snapshot(
     those columns with the caller's types and skips the footer merge,
     which is a Spark job of its own."""
     table_path = table_path.rstrip("/")
-    fs, jvm = _fs(spark, table_path)
+    fs, jvm = hadoop_fs(spark, table_path)
     if version is None:
         v, m = _latest_committed(fs, jvm, table_path)
         if v == 0:
@@ -354,7 +350,7 @@ def vacuum(
     write; the default (24 h) is safe for batch pipelines. Time travel
     to overwritten versions also stops working for vacuumed history."""
     table_path = table_path.rstrip("/")
-    fs, jvm = _fs(spark, table_path)
+    fs, jvm = hadoop_fs(spark, table_path)
     _, manifest = _latest_committed(fs, jvm, table_path)
     live = set(manifest["batches"]) if manifest else set()
     data_dir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/data")

@@ -41,6 +41,12 @@ from ..operators.multimodal import (
     make_signature_kernels,
     make_wav_codec,
 )
+from ._store import (
+    _compact_epoch_store,
+    drain,
+    read_epoch_store,
+    recover_pending_compactions,
+)
 
 BINARY_FILE_SCHEMA = T.StructType(
     [
@@ -118,8 +124,6 @@ def fingerprint_assets(assets: DataFrame) -> DataFrame:
 def read_asset_store(
     spark: SparkSession, path: str, exclude_epoch: int | None = None
 ) -> DataFrame:
-    from ._store import read_epoch_store
-
     return read_epoch_store(spark, path, STORE_SCHEMA, exclude_epoch)
 
 
@@ -161,12 +165,6 @@ class AssetIngest:
         r11 dedup/vector compactions do; crash-safe via the shared
         tmp/_SUCCESS/rename sequence, recovered by every batch's read
         side."""
-        from .frequency_monitor import (
-            _compact_epoch_store,
-            recover_pending_compactions,
-        )
-
-        recover_pending_compactions(self.spark, self.store_path)
         return _compact_epoch_store(
             self.spark,
             self.store_path,
@@ -178,8 +176,6 @@ class AssetIngest:
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         # Promote any crashed compaction BEFORE the gate reads the
         # store, or the batch re-admits every compacted fingerprint.
-        from .frequency_monitor import recover_pending_compactions
-
         recover_pending_compactions(self.spark, self.store_path)
         admitted = self._admit(batch_df, exclude_epoch=epoch_id)
         admitted.select([f.name for f in STORE_SCHEMA.fields]).write.mode(
@@ -192,10 +188,6 @@ class AssetIngest:
         )
         if glob is not None:
             reader = reader.option("pathGlobFilter", glob)
-        stream = reader.load(source_path)
-        return (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        return drain(
+            reader.load(source_path), self._process_batch, self.checkpoint_path
         )

@@ -52,11 +52,11 @@ then stats — that order is load-bearing: a crash between the two
 leaves compacted postings tagged with an epoch the still-per-epoch
 stats witness set contains, so searches stay exact; the reverse order
 would hide every folded posting behind a not-yet-existing witness).
-Both folds reuse the frequency monitor's crash-safe tmp + _SUCCESS +
-delete + rename sequence, and every read path (search AND batch)
-promotes crashed compactions first. Without compaction a year of
-daily batches is 365+ corpus-sized postings dirs listed and scanned
-per search; after it, one bucketed base dir plus the uncompacted tail.
+Both folds use the shared crash-safe ``_store`` compaction, and every
+read path (search AND batch) promotes crashed compactions first.
+Without compaction a year of daily batches is 365+ corpus-sized
+postings dirs listed and scanned per search; after it, one bucketed
+base dir plus the uncompacted tail.
 """
 
 from __future__ import annotations
@@ -68,6 +68,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.text import bm25_build_index, bm25_search_indexed
+from ._store import (
+    _compact_epoch_store,
+    check_store_marker,
+    drain,
+    list_epoch_dirs,
+    parquet_stream,
+    read_epoch_store,
+    recover_pending_compactions,
+)
 
 
 # bm25_build_index canonicalizes the id column to "doc_id" whatever the
@@ -127,36 +136,6 @@ class Bm25IndexIngest:
     # silently missing results — so mismatch is a loud ValueError.
     n_buckets: int = 16
 
-    def _check_n_buckets(self, create: bool) -> None:
-        from ..fsutil import hadoop_fs
-
-        root = f"{self.store_path}/postings"
-        fs, jvm = hadoop_fs(self.spark, root)
-        Path = jvm.org.apache.hadoop.fs.Path
-        if fs.exists(Path(root)):
-            found = [
-                st.getPath().getName()
-                for st in fs.listStatus(Path(root))
-                if st.getPath().getName().startswith(".n_buckets=")
-            ]
-            if found:
-                stored = int(found[0].split("=", 1)[1])
-                if stored != self.n_buckets:
-                    raise ValueError(
-                        f"store {self.store_path!r} was written with "
-                        f"n_buckets={stored}, this ingest is configured "
-                        f"with {self.n_buckets} — a mismatched modulus "
-                        "would prune the wrong buckets (silently missing "
-                        "results); open it with the recorded value"
-                    )
-                return
-            if not create:
-                # Pre-marker store (or one created by hand): refuse to
-                # guess — only a WRITE may stamp the modulus.
-                return
-        if create:
-            fs.mkdirs(Path(f"{root}/.n_buckets={self.n_buckets}"))
-
     def _require_integral_id(self, schema: T.StructType) -> None:
         # The store schema pins doc_id as LongType and the writer casts
         # to it; on a non-integral id_col (string doc ids are common)
@@ -173,16 +152,27 @@ class Bm25IndexIngest:
                 "xxhash64 with collision audit) upstream"
             )
 
+    def _check_n_buckets(self, create: bool) -> None:
+        check_store_marker(
+            self.spark,
+            f"{self.store_path}/postings",
+            "n_buckets",
+            self.n_buckets,
+            create,
+            "bm25",
+        )
+
+    def _recover(self) -> None:
+        recover_pending_compactions(
+            self.spark, f"{self.store_path}/postings", f"{self.store_path}/stats"
+        )
+
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         self._require_integral_id(batch_df.schema)
         self._check_n_buckets(create=True)
         # A compaction that crashed in its delete->rename window leaves
-        # history only in the tmp dir; promote it before touching the
-        # store (the frequency monitor's read-path rule).
-        from .frequency_monitor import recover_pending_compactions
-
-        recover_pending_compactions(self.spark, f"{self.store_path}/postings")
-        recover_pending_compactions(self.spark, f"{self.store_path}/stats")
+        # history only in the tmp dir; promote it before touching the store.
+        self._recover()
         # Persist the batch for the duration of the two writes — the
         # postings and stats lineages would otherwise each re-read the
         # epoch's source files.
@@ -246,17 +236,10 @@ class Bm25IndexIngest:
         max_files_per_trigger: int | None = None,
     ):
         self._require_integral_id(schema)  # fail at start(), not mid-drain
-        reader = self.spark.readStream.schema(schema).option(
-            "pathGlobFilter", "*.parquet"
-        )
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(source_glob)
-        return (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        return drain(
+            parquet_stream(self.spark, schema, source_glob, max_files_per_trigger),
+            self._process_batch,
+            self.checkpoint_path,
         )
 
     def _committed(self) -> tuple[DataFrame, DataFrame]:
@@ -266,15 +249,11 @@ class Bm25IndexIngest:
         writes) is invisible until its replay completes both halves.
         Postings keep their ``bucket`` partition column (search's
         pruning handle; :meth:`read_index` drops it)."""
-        from ._store import read_epoch_store
-        from .frequency_monitor import recover_pending_compactions
-
         self._check_n_buckets(create=False)
-        # Read-path recovery (the frequency monitor's r6 rule): a batch
-        # or search that runs between a crashed compaction and the next
-        # compact call must not see a store missing folded history.
-        recover_pending_compactions(self.spark, f"{self.store_path}/postings")
-        recover_pending_compactions(self.spark, f"{self.store_path}/stats")
+        # Read-path recovery: a batch or search that runs between a
+        # crashed compaction and the next compact call must not see a
+        # store missing folded history.
+        self._recover()
         postings = read_epoch_store(
             self.spark,
             f"{self.store_path}/postings",
@@ -371,39 +350,19 @@ class Bm25IndexIngest:
         helper), and a torn epoch is by construction the newest, so a
         torn epoch's postings can never be folded into the committed
         base. Belt-and-braces, that invariant is still checked here."""
-        from .frequency_monitor import (
-            _compact_epoch_store,
-            recover_pending_compactions,
-        )
-        from ..fsutil import hadoop_fs
-
         # A compaction that crashed in its delete->rename window leaves
         # that substore's folded epochs invisible until recovery runs;
         # computing the torn-epoch check against the un-recovered
         # listing would mis-diagnose those epochs as torn and wedge
         # compact() with a spurious "replay them first". Recover FIRST
         # (the same call the read path makes), then judge.
-        recover_pending_compactions(self.spark, f"{self.store_path}/postings")
-        recover_pending_compactions(self.spark, f"{self.store_path}/stats")
+        self._recover()
 
-        fs, jvm = hadoop_fs(self.spark, self.store_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-
-        def _epochs(sub: str) -> set[int]:
-            root = Path(f"{self.store_path}/{sub}")
-            if not fs.exists(root):
-                return set()
-            return {
-                int(st.getPath().getName().split("=", 1)[1])
-                for st in fs.listStatus(root)
-                if st.getPath().getName().startswith("epoch=")
-            }
-
-        torn = {
-            e
-            for e in _epochs("postings") - _epochs("stats")
-            if e <= upto_epoch
-        }
+        posted, witnessed = (
+            {e for e, _ in list_epoch_dirs(self.spark, f"{self.store_path}/{sub}")}
+            for sub in ("postings", "stats")
+        )
+        torn = {e for e in posted - witnessed if e <= upto_epoch}
         if torn:
             raise ValueError(
                 f"postings epochs {sorted(torn)} <= upto_epoch="
@@ -418,11 +377,10 @@ class Bm25IndexIngest:
         # would hide every folded document behind a witness that never
         # existed. Folding to an arbitrary id is never needed — callers
         # fold up to an epoch they can list — so reject it.
-        foldable = {e for e in _epochs("postings") if e <= upto_epoch}
-        if foldable and upto_epoch not in _epochs("stats"):
+        if any(e <= upto_epoch for e in posted) and upto_epoch not in witnessed:
             raise ValueError(
                 f"upto_epoch={upto_epoch} is not a committed epoch "
-                f"(stats witnesses: {sorted(_epochs('stats'))}) — a "
+                f"(stats witnesses: {sorted(witnessed)}) — a "
                 "crash between the two folds would strand the folded "
                 "postings without a witness; pass one of the committed "
                 "epoch ids"

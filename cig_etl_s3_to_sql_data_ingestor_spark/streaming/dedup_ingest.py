@@ -119,7 +119,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import dedup as D
-from ._store import read_epoch_store
+from ._store import (
+    _compact_epoch_store,
+    check_store_marker,
+    drain,
+    list_epoch_dirs,
+    parquet_stream,
+    read_epoch_store,
+    recover_pending_compactions,
+)
 
 
 def _store_schema(num_hashes: int, id_col: str = "doc_id") -> T.StructType:
@@ -813,12 +821,8 @@ class DedupIngest:
         # A compaction that crashed in its delete->rename window leaves
         # the folded history only in its tmp dir; promote it BEFORE this
         # batch reads any store, or the gates classify against a store
-        # missing all compacted admissions and re-admit their duplicates
-        # (the frequency monitor's read-side rule).
-        from .frequency_monitor import recover_pending_compactions
-
-        for _root in self._store_roots():
-            recover_pending_compactions(self.spark, _root)
+        # missing all compacted admissions and re-admit their duplicates.
+        recover_pending_compactions(self.spark, *self._store_roots())
         # Excluding the current epoch makes a crash-replay of this
         # epoch classify against exactly the store state the first
         # attempt saw — replay-identical, so the epoch-dir overwrites
@@ -919,38 +923,7 @@ class DedupIngest:
         D.unpersist_all()
 
     def _check_bucket_marker(self, root: str, n: int, create: bool, what: str) -> None:
-        """Stamp/cross-check a bucketed store's modulus marker (the
-        bm25 store's rule): a reader configured with a different
-        modulus would prune the WRONG buckets — silently re-admitting
-        duplicates — so mismatch is a loud ValueError. Only a WRITE may
-        stamp it; a pre-bucket store with no marker is read unbucketed
-        (NULL buckets scan)."""
-        from ..fsutil import hadoop_fs
-
-        fs, jvm = hadoop_fs(self.spark, root)
-        Path = jvm.org.apache.hadoop.fs.Path
-        if fs.exists(Path(root)):
-            found = [
-                st.getPath().getName()
-                for st in fs.listStatus(Path(root))
-                if st.getPath().getName().startswith(".n_buckets=")
-            ]
-            if found:
-                stored = int(found[0].split("=", 1)[1])
-                if stored != n:
-                    raise ValueError(
-                        f"{what} store {root!r} was "
-                        f"written with n_buckets={stored}, this ingest "
-                        f"is configured with {n} — "
-                        "a mismatched modulus would prune the wrong "
-                        "buckets (silently re-admitting duplicates); "
-                        "open it with the recorded value"
-                    )
-                return
-            if not create:
-                return
-        if create:
-            fs.mkdirs(Path(f"{root}/.n_buckets={n}"))
+        check_store_marker(self.spark, root, "n_buckets", n, create, what)
 
     def _check_cosine_n_buckets(self, create: bool) -> None:
         self._check_bucket_marker(
@@ -1008,15 +981,9 @@ class DedupIngest:
         ``recover_pending_compactions``, which every batch's read side
         runs first."""
         from .bm25_ingest import term_bucket_col
-        from .frequency_monitor import (
-            _compact_epoch_store,
-            recover_pending_compactions,
-        )
-        from ._store import list_epoch_dirs
 
         roots = self._store_roots()
-        for r in roots:
-            recover_pending_compactions(self.spark, r)
+        recover_pending_compactions(self.spark, *roots)
         # Cross-store validation BEFORE any fold: every configured
         # store must see upto_epoch strictly below ITS newest epoch.
         # This both surfaces a torn newest epoch (one store's newest is
@@ -1034,14 +1001,11 @@ class DedupIngest:
                 )
         out: dict[str, int] = {}
 
-        def fold_concat(df: DataFrame) -> DataFrame:
-            return df
-
         out[self.store_path] = _compact_epoch_store(
             self.spark,
             self.store_path,
             upto_epoch,
-            fold_concat,
+            lambda df: df,
             schema=_store_schema(self.num_hashes, self.id_col),
         )
 
@@ -1132,7 +1096,7 @@ class DedupIngest:
                 self.spark,
                 f"{sp}/norms",
                 upto_epoch,
-                fold_concat,
+                lambda df: df,
                 schema=_cos_norms_schema(self.id_col),
             )
             out[f"{sp}/df"] = _compact_epoch_store(
@@ -1162,15 +1126,8 @@ class DedupIngest:
         becomes many bounded batches, and each batch's admissions are in
         the store before the next batch classifies — foreachBatch runs
         epochs sequentially)."""
-        reader = self.spark.readStream.schema(schema).option(
-            "pathGlobFilter", "*.parquet"
-        )
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(source_glob)
-        return (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        return drain(
+            parquet_stream(self.spark, schema, source_glob, max_files_per_trigger),
+            self._process_batch,
+            self.checkpoint_path,
         )

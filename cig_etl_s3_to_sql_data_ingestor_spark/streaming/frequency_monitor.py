@@ -6,16 +6,15 @@ watches score distributions; this watches key mass).
 Why a sketch and not a running per-key count table: at 100 TB of
 events the key cardinality is unbounded, but the CMS is ``depth x
 width`` integer counters PER EPOCH — key cardinality never grows it,
-and sketch cells ADD, so merging epochs is a plain aggregate. The
-store does grow O(n_epochs) in epoch-dir count (each batch appends up
-to ``depth*width`` rows), and every batch's prior-merge re-reads all
-prior epoch dirs; ``compact_sketch_store`` folds committed history
-into a single summed base sketch (cells add, so compaction IS the
-merge aggregate) and ``compact_alerts_store`` does the same for the
-alerts dirs the ever-alerted gate scans (disjoint union) to keep both the disk footprint and the per-batch
-scan bounded. Estimates only overestimate (collision mass), never
-under — an alert can false-positive under heavy collision but never
-miss a true heavy hitter above threshold.
+and sketch cells ADD, so merging epochs is a plain aggregate. Both
+the sketch and the alerts are epoch stores (the ``_store`` protocol);
+``compact_sketch_store`` folds committed sketch epochs into one
+cell-summed base (cells add, so compaction IS the merge aggregate) and
+``compact_alerts_store`` concatenates the disjoint alerts epochs the
+ever-alerted gate scans, keeping the per-batch scan bounded.
+Estimates only overestimate (collision mass), never under — an alert
+can false-positive under heavy collision but never miss a true heavy
+hitter above threshold.
 
 Each micro-batch:
 
@@ -47,6 +46,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.sketches import cms_build, cms_estimate
+from ._store import (
+    _compact_epoch_store,
+    drain,
+    parquet_stream,
+    read_epoch_store,
+    recover_pending_compactions,
+)
 
 SKETCH_SCHEMA = T.StructType(
     [
@@ -60,172 +66,7 @@ SKETCH_SCHEMA = T.StructType(
 def read_sketch_store(
     spark: SparkSession, path: str, exclude_epoch: int | None = None
 ) -> DataFrame:
-    from ._store import read_epoch_store
-
     return read_epoch_store(spark, path, SKETCH_SCHEMA, exclude_epoch)
-
-
-def _store_fs(spark: SparkSession, path: str):
-    from ..fsutil import hadoop_fs
-
-    return hadoop_fs(spark, path)
-
-
-def _finish_compaction(fs, jvm, store_path: str, upto: int) -> None:
-    """Promote (or discard) a ``.compact_tmp_upto=K`` dir. The tmp dir
-    is only promotable once its ``_SUCCESS`` marker exists — a tmp
-    without the marker is a write that died mid-flight, and the source
-    epoch dirs are still intact, so it is simply dropped. Deleting the
-    folded epoch dirs before the rename is safe to re-run: the tmp dir
-    holds the complete sum, so a crash anywhere in this function is
-    finished by the recovery scan at the top of the next compact call."""
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmp = Path(f"{store_path}/.compact_tmp_upto={upto}")
-    if not fs.exists(tmp):
-        return
-    if not fs.exists(Path(f"{store_path}/.compact_tmp_upto={upto}/_SUCCESS")):
-        fs.delete(tmp, True)
-        return
-    for st in fs.listStatus(Path(store_path)):
-        name = st.getPath().getName()
-        if name.startswith("epoch=") and int(name.split("=", 1)[1]) <= upto:
-            fs.delete(st.getPath(), True)
-    # Hadoop FS rename reports failure via its boolean, not an
-    # exception. At this point the folded epoch dirs are GONE — a
-    # silently failed rename would leave the store missing all
-    # compacted history, and batches reading the understated sketch
-    # could suppress a true heavy-hitter alert. Raise so the caller
-    # (or the next recovery scan) retries the promotion instead.
-    if not fs.rename(tmp, Path(f"{store_path}/epoch={upto}")):
-        raise IOError(
-            f"compaction rename failed: {store_path}/.compact_tmp_upto="
-            f"{upto} -> epoch={upto}; folded dirs are already deleted — "
-            "the tmp dir holds the complete sum, re-run recovery"
-        )
-
-
-def recover_pending_compactions(spark: SparkSession, store_path: str) -> None:
-    """Finish (or discard) any ``.compact_tmp_upto=K`` left by a crash
-    in the delete→rename window. Called from the READ side of each
-    batch, not only from the next compact call: a monitor batch that
-    runs between a crashed compaction and the next compact would
-    otherwise read a store missing all compacted history and could
-    suppress a true heavy-hitter alert."""
-    fs, jvm = _store_fs(spark, store_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(store_path)
-    if not fs.exists(root):
-        return
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith(".compact_tmp_upto="):
-            _finish_compaction(fs, jvm, store_path, int(name.split("=", 1)[1]))
-
-
-def _has_part_files(fs, Path, path: str) -> bool:
-    """True if ``path`` holds any ``.parquet`` part file, descending
-    through partition subdirs (``bucket=B`` layouts) but not through
-    ``_temporary``/dot dirs — the flat ``endswith('.parquet')`` check
-    would misread a partitioned-but-populated epoch dir as a crashed
-    writer's empty mkdir and delete it."""
-    for st in fs.listStatus(Path(path)):
-        name = st.getPath().getName()
-        if st.isDirectory():
-            if not name.startswith(("_", ".")) and _has_part_files(
-                fs, Path, str(st.getPath())
-            ):
-                return True
-        elif name.endswith(".parquet"):
-            return True
-    return False
-
-
-def _compact_epoch_store(
-    spark: SparkSession,
-    store_path: str,
-    upto_epoch: int,
-    fold,
-    partition_by: list[str] | None = None,
-    schema=None,
-) -> int:
-    """Shared epoch-dir compaction: fold every ``epoch=N`` dir with
-    ``N <= upto_epoch`` into ONE dir ``epoch=<upto_epoch>`` whose
-    content is ``fold(rows of the folded range)``; returns how many
-    dirs were folded (0 if nothing to do).
-
-    The NEWEST epoch dir is never folded (``upto_epoch`` must be
-    strictly below it): the newest epoch may be the replay target of a
-    batch whose checkpoint commit did not land, and replay relies on
-    ``exclude_epoch`` dropping exactly that dir. Crash-safe via the
-    ``.compact_tmp`` + ``_SUCCESS`` + delete + rename sequence; an
-    interrupted compaction is finished (or discarded, if the tmp write
-    never completed) by the next call."""
-    fs, jvm = _store_fs(spark, store_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(store_path)
-    if not fs.exists(root):
-        return 0
-    recover_pending_compactions(spark, store_path)
-    epochs = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(root)
-        if st.getPath().getName().startswith("epoch=")
-    )
-    if not epochs:
-        return 0
-    if upto_epoch >= epochs[-1]:
-        raise ValueError(
-            f"compact upto_epoch={upto_epoch} must be strictly below the "
-            f"newest epoch {epochs[-1]} — the newest dir may be an "
-            "uncommitted batch's replay target"
-        )
-    fold_epochs = [e for e in epochs if e <= upto_epoch]
-    if len(fold_epochs) < 2:
-        return 0
-    # A dir with zero part files (a writer that died between mkdir and
-    # its first file) would break schema inference; it holds no rows,
-    # so folding it means deleting it.
-    readable = [
-        e
-        for e in fold_epochs
-        if _has_part_files(fs, Path, f"{store_path}/epoch={e}")
-    ]
-    if not readable:
-        # Every foldable dir is a crashed writer's empty mkdir: there
-        # are no rows to fold, but leaving the dirs would accumulate
-        # them forever on a store that only ever crashes — delete them
-        # outright (they hold nothing, so no tmp/rename dance needed).
-        for e in fold_epochs:
-            fs.delete(Path(f"{store_path}/epoch={e}"), True)
-        return len(fold_epochs)
-    if schema is not None:
-        # Pinned-schema per-dir union (the shared mixed-layout reader,
-        # _store.read_epoch_dirs_union): a store mixing flat (legacy
-        # writer version) and partition-subdir epoch layouts defeats
-        # the multi-path discovery read below with
-        # CONFLICTING_PARTITION_COLUMN_NAMES; reading each dir
-        # independently cannot conflict, and the pinned schema fills
-        # layout columns a legacy dir lacks with NULL for the fold to
-        # migrate (bm25's bucket recompute).
-        from ._store import read_epoch_dirs_union
-
-        src = read_epoch_dirs_union(
-            spark, store_path, schema, epochs=set(readable)
-        ).drop("epoch")
-    else:
-        src = spark.read.option("basePath", store_path).parquet(
-            *[f"{store_path}/epoch={e}" for e in readable]
-        )
-    folded = fold(src)
-    writer = folded.write.mode("overwrite")
-    if partition_by:
-        # Stores with a partition-local at-rest layout (bm25_ingest's
-        # term buckets) keep it through compaction so the read side's
-        # partition pruning survives the fold.
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(f"{store_path}/.compact_tmp_upto={upto_epoch}")
-    _finish_compaction(fs, jvm, store_path, upto_epoch)
-    return len(fold_epochs)
 
 
 def compact_sketch_store(
@@ -286,8 +127,7 @@ class FrequencyMonitor:
         # compacted history only in the tmp dir; promote it BEFORE this
         # batch reads the store, or the merged sketch understates and a
         # true heavy hitter can slip below threshold.
-        recover_pending_compactions(self.spark, self.store_path)
-        recover_pending_compactions(self.spark, self.alerts_path)
+        recover_pending_compactions(self.spark, self.store_path, self.alerts_path)
         delta = cms_build(
             batch_df, self.key_col, depth=self.depth, width=self.width
         )
@@ -333,8 +173,6 @@ class FrequencyMonitor:
         # alerts on its next appearance. The alerts store is bounded by
         # the number of distinct heavy hitters, and the anti-join side
         # is the batch's distinct keys — both small.
-        from ._store import read_epoch_store
-
         alerts_schema = T.StructType(
             [
                 T.StructField(
@@ -354,14 +192,8 @@ class FrequencyMonitor:
         )
 
     def start(self, source_glob: str, schema: T.StructType):
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(source_glob)
-        )
-        return (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        return drain(
+            parquet_stream(self.spark, schema, source_glob),
+            self._process_batch,
+            self.checkpoint_path,
         )

@@ -3,7 +3,7 @@ reference's daily marker-based incrementality (SURVEY.md §2.8).
 
 The file source's checkpoint natively tracks processed files
 (exactly-once input accounting, replacing `CustomMarkerTable.exists`),
-``trigger(availableNow=True)`` turns each scheduled run into a bounded
+the ``availableNow`` trigger turns each scheduled run into a bounded
 micro-batch drain (the daily-cron analog), and ``foreachBatch`` gives a
 transactional hook where the batch is cleaned, written, and the marker
 ledger upserted — keeping the SQL-side audit trail the reference exposes
@@ -34,6 +34,7 @@ from ..catalog import TableSpec
 from ..operators import transforms as TR
 from ..operators.marker import ParquetMarkerLedger
 from ..pipeline import stringify
+from ._store import drain, parquet_stream
 
 
 @dataclass
@@ -52,17 +53,14 @@ class StreamingIngest:
         """Drain all currently-available files through clean+sink, then
         stop (availableNow). Re-running picks up only new files via the
         checkpoint — no reprocessing, no marker round-trip needed for
-        input dedup."""
+        input dedup. The marker ledger gets one file per micro-batch and
+        is compacted once per run, before the drain starts."""
         ingestion_date = self.ingestion_date or dt.date.today()
-
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(source_glob)
-        )
-
-        table, env = self.table, self.environment
-        marker_path, spark = self.marker_path, self.spark
+        table, env, spark = self.table, self.environment, self.spark
+        ledger = None
+        if self.marker_path:
+            ledger = ParquetMarkerLedger(spark, self.marker_path)
+            ledger.compact()
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
             files = [
@@ -97,8 +95,7 @@ class StreamingIngest:
                 final.write.mode("overwrite").parquet(
                     f"{self.sink_path}/epoch={epoch_id}"
                 )
-            if marker_path and files:
-                ledger = ParquetMarkerLedger(spark, marker_path)
+            if ledger is not None and files:
                 completed = spark.createDataFrame(
                     [(f.rsplit("/", 1)[-1],) for f in files], "file_name string"
                 ).select(
@@ -109,13 +106,11 @@ class StreamingIngest:
                 )
                 ledger.touch(completed)
 
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        return drain(
+            parquet_stream(spark, self.schema, source_glob),
+            process_batch,
+            self.checkpoint_path,
         )
-        return query
 
 
 def windowed_event_counts(

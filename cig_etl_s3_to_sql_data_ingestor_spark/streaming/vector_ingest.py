@@ -79,6 +79,15 @@ from ..operators.similarity import (
     sq8_reconstruct_col,
     sq8_stats,
 )
+from ._store import (
+    _compact_epoch_store,
+    check_store_marker,
+    drain,
+    list_epoch_dirs,
+    parquet_stream,
+    read_epoch_store,
+    recover_pending_compactions,
+)
 
 
 def _index_schema(
@@ -118,8 +127,6 @@ def read_index_store(
     """The accumulated index, or an empty frame when it does not exist
     yet (see streaming._store.read_epoch_store for the shared
     contract)."""
-    from ._store import read_epoch_store
-
     return read_epoch_store(
         spark, path, _index_schema(id_col, vec_col, quantized), exclude_epoch
     )
@@ -193,46 +200,18 @@ class VectorIngest:
         return digest
 
     def _check_centroid_marker(self, create: bool) -> None:
-        """Stamp/cross-check the store's centroid-identity marker (the
-        bucketed stores' ``.n_buckets=`` discipline, applied to the
-        quantity that keys THIS store's cells): a store opened with
+        """The store's centroid-identity marker: a store opened with
         centroids other than those its vectors were assigned under
-        would probe the wrong cells — search silently returns wrong
-        neighbors and the near-dup gate silently re-admits duplicates —
-        so mismatch is a loud ValueError. Only a WRITE may stamp; a
-        pre-marker store is read unguarded (and stamped by its next
-        write)."""
-        from ..fsutil import hadoop_fs
-
-        fs, jvm = hadoop_fs(self.spark, self.store_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        root = Path(self.store_path)
-        if fs.exists(root):
-            found = [
-                st.getPath().getName()
-                for st in fs.listStatus(root)
-                if st.getPath().getName().startswith(".centroids_md5=")
-            ]
-            if found:
-                stored = found[0].split("=", 1)[1]
-                if stored != self._centroid_digest():
-                    raise ValueError(
-                        f"vector index store {self.store_path!r} was "
-                        f"written under centroids {stored}, but "
-                        f"{self.centroids_path!r} digests to "
-                        f"{self._centroid_digest()} — probing with "
-                        "foreign centroids searches the wrong cells "
-                        "(wrong results, silently re-admitted "
-                        "duplicates); open it with the centroids it "
-                        "was built with"
-                    )
-                return
-            if not create:
-                return
-        if create:
-            fs.mkdirs(
-                Path(f"{self.store_path}/.centroids_md5={self._centroid_digest()}")
-            )
+        would probe the wrong cells (wrong neighbors, silently
+        re-admitted duplicates)."""
+        check_store_marker(
+            self.spark,
+            self.store_path,
+            "centroids_md5",
+            self._centroid_digest,
+            create,
+            "vector index",
+        )
 
     def _check_layout(self) -> None:
         """Eager layout check at every store open: raise when a raw
@@ -255,8 +234,6 @@ class VectorIngest:
         but each epoch dir is internally consistent, so the column set
         is derived per epoch dir instead (the same fallback
         read_epoch_store uses for reading)."""
-        from ._store import list_epoch_dirs
-
         try:
             cols = set(self.spark.read.parquet(self.store_path).columns)
         except Exception as ex:  # noqa: BLE001 — dispatched by error class
@@ -474,12 +451,6 @@ class VectorIngest:
         epoch is never foldable (it may be an uncommitted batch's replay
         target); crash-safe via the shared tmp/_SUCCESS/rename sequence,
         recovered by the read side of every batch and search."""
-        from .frequency_monitor import (
-            _compact_epoch_store,
-            recover_pending_compactions,
-        )
-
-        recover_pending_compactions(self.spark, self.store_path)
         self._check_layout()
         return _compact_epoch_store(
             self.spark,
@@ -555,8 +526,6 @@ class VectorIngest:
         # Promote any crashed compaction BEFORE the gate reads the
         # store — a store missing its folded history would silently
         # re-admit every compacted near-duplicate.
-        from .frequency_monitor import recover_pending_compactions
-
         recover_pending_compactions(self.spark, self.store_path)
         admitted = self._admit(batch_df, exclude_epoch=epoch_id)
         self._write_epoch(admitted, epoch_id)
@@ -567,17 +536,10 @@ class VectorIngest:
         schema: T.StructType,
         max_files_per_trigger: int | None = None,
     ):
-        reader = self.spark.readStream.schema(schema).option(
-            "pathGlobFilter", "*.parquet"
-        )
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(source_glob)
-        return (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        return drain(
+            parquet_stream(self.spark, schema, source_glob, max_files_per_trigger),
+            self._process_batch,
+            self.checkpoint_path,
         )
 
     def search(self, queries: DataFrame, k: int = 5, n_probe: int = 4) -> DataFrame:
@@ -585,8 +547,6 @@ class VectorIngest:
         frozen broadcast centroids, equi-join on probed cell ids, exact
         cosine re-rank — the stored norms make scoring one fold per
         candidate pair."""
-        from .frequency_monitor import recover_pending_compactions
-
         recover_pending_compactions(self.spark, self.store_path)
         probes = ivf_assign(
             queries.select(

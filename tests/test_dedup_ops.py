@@ -372,6 +372,54 @@ def test_loop_checkpoints_released_by_unpersist_all(spark):
     assert not persistent_ids() - before
 
 
+def test_unreachable_loop_checkpoints_freed_by_gc(spark):
+    """A driver-contract query that never releases (PageRank here) must
+    not pin its checkpoints for the life of the session: once no frame
+    reads them, garbage collection frees them as it does for a bare
+    localCheckpoint. A checkpoint a reachable frame still reads is
+    freed by unpersist_all."""
+    import gc
+    import time
+
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators.graph import (
+        undirected_pagerank,
+    )
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def leaked_after_gc(bound):
+        # The ContextCleaner frees weakly reachable RDDs asynchronously,
+        # behind whatever earlier work left it to clean.
+        deadline = time.monotonic() + 120
+        while True:
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            n = len(persistent_ids() - before)
+            if n < bound or time.monotonic() > deadline:
+                return n
+            time.sleep(1)
+
+    D.unpersist_all()
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 12) for i in range(30)], ["src", "dst"]
+    )
+    before = persistent_ids()
+    undirected_pagerank(edges, n_iters=12, checkpoint_every=3).collect()
+    per_call = len(persistent_ids() - before)
+    assert per_call > 0
+    for _ in range(2):
+        undirected_pagerank(edges, n_iters=12, checkpoint_every=3).collect()
+    # Holding them strongly keeps all three calls' checkpoints.
+    assert leaked_after_gc(3 * per_call) < 3 * per_call
+
+    kept = undirected_pagerank(edges, n_iters=12, checkpoint_every=3)
+    kept.collect()
+    assert persistent_ids() - before
+    D.unpersist_all()
+    assert not persistent_ids() - before
+
+
 def test_source_overlap_hot_shingle_cap(spark):
     """A universal (boilerplate) shingle must be droppable from the
     intersection index via max_shingle_df, while per-source set sizes
