@@ -51,6 +51,7 @@ webhook when anything is stale.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import dataclasses
 import datetime as dt
 import json
@@ -61,6 +62,34 @@ from pyspark.sql import SparkSession
 from .catalog import load_catalog
 from .notify import Notifier, WebhookNotifier
 from .pipeline import BatchIngest, IngestResult
+
+
+@contextlib.contextmanager
+def _session(app_name: str, spark: SparkSession | None = None):
+    """The session every entry runs in: the caller's, else the process'
+    active one (embedding hosts, spark-submit, tests), used as it is —
+    ``get_spark`` over a live session would rewrite its runtime SQL conf.
+    Only from a cold start is a session created, and it is stopped on
+    exit."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is not None:
+        yield spark
+        return
+    from .session import get_spark
+
+    spark = get_spark(app_name=app_name)
+    try:
+        yield spark
+    finally:
+        spark.stop()
+
+
+def _run_date(cfg: dict) -> dt.date:
+    """``ingestion_date``: 'YYYY-MM-DD', or today when empty (`main.py:161`)."""
+    date_str = cfg.get("ingestion_date") or ""
+    if not date_str:
+        return dt.date.today()
+    return dt.datetime.strptime(date_str, "%Y-%m-%d").date()
 
 
 def run_from_config(
@@ -82,28 +111,12 @@ def run_from_config(
     data_folder = cfg["data_folder"]
     sources_key = "environments" if layout == "hosting" else "data_sources"
     sources = cfg.get(sources_key)
-    date_str = cfg.get("ingestion_date") or ""
-    ingestion_date = (
-        dt.datetime.strptime(date_str, "%Y-%m-%d").date()
-        if date_str
-        else dt.date.today()
-    )
     jdbc_url = cfg.get("ingest_to") or None
     sink_root = cfg.get("sink_root") or os.path.join(data_folder, "_sink")
     marker_path = cfg.get("marker_path") or os.path.join(sink_root, "_etl_marker")
     if notifier is None and cfg.get("webhook_url"):
         notifier = WebhookNotifier(cfg["webhook_url"])
-
-    # Reuse the process' active session when one exists (embedding hosts,
-    # spark-submit, tests); create-and-own one only from a cold start.
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    own_session = spark is None
-    if own_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name=f"cig-etl-ingest-{layout}")
-    try:
+    with _session(f"cig-etl-ingest-{layout}", spark) as spark:
         ingest = BatchIngest(
             spark,
             catalog,
@@ -115,12 +128,9 @@ def run_from_config(
             notifier=notifier,
             file_name=cfg.get("debug_file_name") or None,
         )
-        results = ingest.run(data_folder, ingestion_date)
+        results = ingest.run(data_folder, _run_date(cfg))
         print(ingest.summary())
         return results
-    finally:
-        if own_session:
-            spark.stop()
 
 
 def run_monitor_from_config(
@@ -131,49 +141,30 @@ def run_monitor_from_config(
 ):
     """Freshness-monitor run (C6): report entities whose latest backup
     predates the reference date; notify when anything is stale."""
-    import datetime as dt
+    from pyspark.sql import functions as F
 
     from .operators.monitor import freshness_report
     from .sources.parquet_tree import discover_files
 
     with open(config_path) as f:
         cfg = json.load(f)
-    date_str = cfg.get("ingestion_date") or ""
-    reference_date = (
-        dt.datetime.strptime(date_str, "%Y-%m-%d").date()
-        if date_str
-        else dt.date.today()
-    )
     envs = cfg.get("environments_to_check") or cfg.get("data_sources_to_check")
     if notifier is None and cfg.get("webhook_url"):
         notifier = WebhookNotifier(cfg["webhook_url"])
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    own_session = spark is None
-    if own_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="cig-etl-monitor")
-    try:
+    with _session("cig-etl-monitor", spark) as spark:
         files = discover_files(spark, cfg["data_folder"], layout)
         if envs:
-            from pyspark.sql import functions as F
-
-            col = "environment" if layout == "hosting" else "data_source"
-            files = files.filter(F.col(col).isin(envs))
-        stale = freshness_report(files, reference_date).collect()
-        lines = [
-            f"STALE {r['environment']}/{r['entity_name']}: latest {r['latest_date']}"
-            for r in stale
-        ]
-        report = "\n".join(lines) if lines else "all entities fresh"
-        print(report)
-        if notifier is not None and lines:
-            notifier.send(report)
-        return stale
-    finally:
-        if own_session:
-            spark.stop()
+            files = files.filter(F.col("data_source").isin(envs))
+        stale = freshness_report(files, _run_date(cfg)).collect()
+    lines = [
+        f"STALE {r['environment']}/{r['entity_name']}: latest {r['latest_date']}"
+        for r in stale
+    ]
+    report = "\n".join(lines) if lines else "all entities fresh"
+    print(report)
+    if notifier is not None and lines:
+        notifier.send(report)
+    return stale
 
 
 def _main(layout: str, default_config: str, argv: list[str] | None = None) -> int:
@@ -239,15 +230,9 @@ def main_optimize(argv: list[str] | None = None) -> int:
 
     from .operators.maintenance import compact_parquet, zorder_compact
 
-    spark = SparkSession.getActiveSession()
-    own_session = spark is None
-    if own_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="cig-etl-optimize")
-    try:
-        target = args.target_file_mb * 1024 * 1024
-        cols = [c.strip() for c in args.zorder.split(",") if c.strip()]
+    target = args.target_file_mb * 1024 * 1024
+    cols = [c.strip() for c in args.zorder.split(",") if c.strip()]
+    with _session("cig-etl-optimize") as spark:
         if cols:
             n = zorder_compact(spark, args.path, cols, target_file_bytes=target)
             print(f"z-ordered {args.path} on ({', '.join(cols)}) into {n} files")
@@ -257,15 +242,240 @@ def main_optimize(argv: list[str] | None = None) -> int:
                 print(f"compacted {args.path} into {n} files")
             else:
                 print(f"{args.path} already compact; nothing done")
-    finally:
-        if own_session:
-            spark.stop()
     return 0
+
+
+def _gate(cls, spark: SparkSession, cfg: dict, what: str, run_keys=(), **fixed):
+    """Build the gate dataclass ``cls`` from the config keys named like
+    its fields, so the dataclass is the one place its keys and defaults
+    are defined: a field the config leaves out keeps its default.
+    ``run_keys`` are the mode's own keys; ``fixed`` sets fields the mode
+    fills itself (placeholder paths). Any other key raises."""
+    names = {f.name for f in dataclasses.fields(cls)} - {"spark"}
+    unknown = set(cfg) - names - set(run_keys)
+    if unknown:
+        raise ValueError(f"unknown {what} keys: {sorted(unknown)}")
+    return cls(spark, **{**{k: v for k, v in cfg.items() if k in names}, **fixed})
+
+
+def _ints(cfg: dict, **keys: str) -> dict[str, int]:
+    """The integer knobs ``cfg`` sets, keyed by the callee's parameter
+    names (``param="config_key"``); a knob left out keeps the callee's
+    default."""
+    return {arg: int(cfg[key]) for arg, key in keys.items() if key in cfg}
+
+
+def _hits(df, *cols: str) -> list[dict]:
+    """A search result's rows, in (query_id, rank) order, as JSON objects."""
+    return [r.asDict() for r in df.select(*cols).orderBy("query_id", "rank").collect()]
+
+
+_DRAIN_KEYS = ("mode", "source_glob", "max_files_per_trigger")
+
+
+def _stream_dedup(spark: SparkSession, cfg: dict) -> dict:
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
+
+    from .streaming.dedup_ingest import DedupIngest
+
+    ingest = _gate(DedupIngest, spark, cfg, "dedup stream-config", _DRAIN_KEYS)
+    fields = [
+        T.StructField(ingest.id_col, T.LongType()),
+        T.StructField(ingest.text_col, T.StringType()),
+    ]
+    if ingest.embedding_store_path is not None:
+        # The semantic gate reads a doc-embedding column the source
+        # must supply alongside the text.
+        fields.append(
+            T.StructField(ingest.embedding_col, T.ArrayType(T.DoubleType()))
+        )
+    ingest.start(
+        cfg["source_glob"],
+        T.StructType(fields),
+        max_files_per_trigger=cfg.get("max_files_per_trigger"),
+    ).awaitTermination()
+    # An empty backlog (source glob matched no files) never runs a
+    # micro-batch, so the sink dir may not exist — a valid run that
+    # accepted 0 rows, not an error.
+    try:
+        n = spark.read.parquet(ingest.sink_path).count()
+    except AnalysisException as ex:
+        if "PATH_NOT_FOUND" not in str(ex):
+            raise
+        n = 0
+    return {"mode": "dedup", "accepted_rows": n}
+
+
+def _stream_vector(spark: SparkSession, cfg: dict) -> dict:
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from .fsutil import hadoop_fs
+    from .operators.similarity import kmeans_centroids
+    from .streaming.vector_ingest import (
+        VectorIngest,
+        bootstrap_sq8_stats,
+        read_index_store,
+    )
+
+    run_keys = _DRAIN_KEYS + (
+        "bootstrap_input", "n_cells", "dim",
+        "search_queries", "search_k", "search_n_probe",
+    )
+    ingest = _gate(VectorIngest, spark, cfg, "vector stream-config", run_keys)
+    id_col, vec_col, stats = ingest.id_col, ingest.vec_col, ingest.sq8_stats_path
+
+    def _missing(path: str) -> bool:
+        fs, jvm = hadoop_fs(spark, path)
+        return not fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+
+    if cfg.get("bootstrap_input"):
+        boot = spark.read.parquet(cfg["bootstrap_input"]).select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+        )
+        if _missing(ingest.centroids_path):
+            kmeans_centroids(
+                boot, id_col=id_col, vec_col=vec_col, **_ints(cfg, n_cells="n_cells")
+            ).write.parquet(ingest.centroids_path)
+        if stats and _missing(stats):
+            bootstrap_sq8_stats(boot, stats, vec_col=vec_col, **_ints(cfg, dim="dim"))
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType()),
+            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
+        ]
+    )
+    ingest.start(
+        cfg["source_glob"],
+        schema,
+        max_files_per_trigger=cfg.get("max_files_per_trigger"),
+    ).awaitTermination()
+    quantized = stats is not None
+    n = read_index_store(
+        spark, ingest.store_path, id_col=id_col, vec_col=vec_col, quantized=quantized
+    ).count()
+    out = {"mode": "vector", "index_rows": n, "quantized": quantized}
+    if cfg.get("search_queries"):
+        hits = ingest.search(
+            spark.read.parquet(cfg["search_queries"]),
+            **_ints(cfg, k="search_k", n_probe="search_n_probe"),
+        )
+        out["search"] = _hits(hits, "query_id", "cand_id", "rank", "cosine_sim")
+    return out
+
+
+def _stream_hybrid(spark: SparkSession, cfg: dict) -> dict:
+    from .streaming.bm25_ingest import Bm25IndexIngest
+    from .streaming.hybrid_search import hybrid_search_from_stores
+    from .streaming.vector_ingest import VectorIngest
+
+    # Prefixed names (two stores in one config), not gate field names.
+    allowed = {
+        "mode", "bm25_store_path", "vector_store_path",
+        "centroids_path", "sq8_stats_path", "search_terms",
+        "search_queries", "search_k", "search_bm25_k",
+        "search_ann_k", "search_n_probe", "rrf_k0", "id_col",
+        "vec_col", "bm25_n_buckets",
+    }
+    unknown = set(cfg) - allowed
+    if unknown:
+        raise ValueError(f"unknown hybrid stream-config keys: {sorted(unknown)}")
+    # Search-only opens: no micro-batch runs, so neither checkpoint is
+    # touched (or created).
+    bm25 = Bm25IndexIngest(
+        spark,
+        store_path=cfg["bm25_store_path"],
+        checkpoint_path=f"{cfg['bm25_store_path']}/_unused_ckpt",
+        **_ints(cfg, n_buckets="bm25_n_buckets"),
+    )
+    vec = VectorIngest(
+        spark,
+        centroids_path=cfg["centroids_path"],
+        store_path=cfg["vector_store_path"],
+        checkpoint_path=f"{cfg['vector_store_path']}/_unused_ckpt",
+        **{k: cfg[k] for k in ("id_col", "vec_col", "sq8_stats_path") if k in cfg},
+    )
+    fused = hybrid_search_from_stores(
+        bm25,
+        vec,
+        spark.read.parquet(cfg["search_terms"]),
+        spark.read.parquet(cfg["search_queries"]),
+        **_ints(
+            cfg,
+            k="search_k",
+            k0="rrf_k0",
+            bm25_k="search_bm25_k",
+            ann_k="search_ann_k",
+            n_probe="search_n_probe",
+        ),
+    )
+    return {
+        "mode": "hybrid",
+        "search": _hits(fused, "query_id", "cand_id", "rank", "rrf_score"),
+    }
+
+
+def _stream_compact(spark: SparkSession, cfg: dict) -> dict:
+    # Store maintenance, not a stream: fold committed epoch dirs of one
+    # gate family's store(s) into a single base dir so the per-batch/
+    # per-search dir listing stops growing with batch count. Run it
+    # OFFLINE (no stream draining the checkpoint) — the newest epoch is
+    # never folded, so a stopped stream's replay target survives.
+    from .streaming.asset_ingest import AssetIngest
+    from .streaming.bm25_ingest import Bm25IndexIngest
+    from .streaming.dedup_ingest import DedupIngest
+    from .streaming.vector_ingest import VectorIngest
+
+    families = {
+        "dedup": DedupIngest,
+        "vector": VectorIngest,
+        "bm25": Bm25IndexIngest,
+        "asset": AssetIngest,
+    }
+    target = cfg.get("target")
+    if target not in families:
+        raise ValueError(
+            "compact config target must be 'dedup', 'vector', 'bm25' "
+            f"or 'asset', got {target!r}"
+        )
+    upto = int(cfg["upto_epoch"])
+    store = cfg.get("store_path")
+    # Compaction never touches a checkpoint or sink: placeholders.
+    fixed = {"checkpoint_path": f"{store}/_unused_ckpt"}
+    if target == "dedup":
+        fixed["sink_path"] = f"{store}/_unused_sink"
+    gate = _gate(
+        families[target],
+        spark,
+        cfg,
+        f"compact/{target} config",
+        ("mode", "target", "upto_epoch"),
+        **fixed,
+    )
+    folded = gate.compact(upto)
+    if target != "dedup":  # one store; dedup reports each of its stores
+        folded = {store: folded}
+    return {
+        "mode": "compact",
+        "target": target,
+        "upto_epoch": upto,
+        "folded_dirs": folded,
+    }
+
+
+_STREAM_MODES = {
+    "dedup": _stream_dedup,
+    "vector": _stream_vector,
+    "hybrid": _stream_hybrid,
+    "compact": _stream_compact,
+}
 
 
 def main_stream(argv: list[str] | None = None) -> int:
     """Streaming-gate entry: drain a parquet source directory through one
-    of the streaming ingest gates per a JSON run config.
+    of the streaming ingest gates per a JSON run config, and print one
+    JSON line with the outcome.
 
     ``mode: "dedup"`` — text dedup-at-ingest (``DedupIngest``): the LSH
     signature gate plus the optional CDC chunk (``cdc_store_path``) and
@@ -290,11 +500,17 @@ def main_stream(argv: list[str] | None = None) -> int:
     sharing a query_id space; no micro-batch runs and neither
     checkpoint is touched.
 
-    All other keys default to the dataclass defaults; unknown keys are
-    rejected loudly (a typo'd gate path silently disabling a gate would
-    re-admit duplicates)."""
-    import json as _json
+    ``mode: "compact"`` — offline store maintenance: ``target`` picks
+    the gate family (``dedup``, ``vector``, ``bm25`` or ``asset``) and
+    ``upto_epoch`` the newest epoch to fold; the other keys are that
+    family's ingest keys (its dataclass fields), and compaction reads
+    only the store paths and layout among them.
 
+    In the dedup, vector and compact modes the gate's keys are its
+    dataclass fields, and a key the config leaves out keeps the
+    dataclass default; search knobs left out keep the search
+    function's defaults. Unknown keys are rejected loudly (a typo'd
+    gate path silently disabling a gate would re-admit duplicates)."""
     parser = argparse.ArgumentParser(
         description="Run a streaming ingest gate per a JSON run config."
     )
@@ -305,317 +521,24 @@ def main_stream(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
     with open(args.stream_config_filename) as fh:
-        cfg = _json.load(fh)
-
-    from .session import get_spark
-
-    spark = SparkSession.getActiveSession() or get_spark(
-        app_name="cig-etl-stream"
-    )
+        cfg = json.load(fh)
     mode = cfg.get("mode")
-    mft = cfg.get("max_files_per_trigger")
-    if mode == "dedup":
-        from pyspark.sql import types as T
-
-        from .operators.dedup import unpersist_all
-        from .streaming.dedup_ingest import DedupIngest
-
-        run_keys = {"mode", "source_glob", "max_files_per_trigger"}
-        allowed = {f.name for f in dataclasses.fields(DedupIngest)} - {"spark"}
-        unknown = set(cfg) - allowed - run_keys
-        if unknown:
-            raise ValueError(f"unknown dedup stream-config keys: {sorted(unknown)}")
-        ingest = DedupIngest(
-            spark,
-            **{k: v for k, v in cfg.items() if k not in run_keys},
+    if mode not in _STREAM_MODES:
+        raise ValueError(
+            "stream config mode must be 'dedup', 'vector', 'hybrid' or "
+            f"'compact', got {mode!r}"
         )
-        fields = [
-            T.StructField(ingest.id_col, T.LongType()),
-            T.StructField(ingest.text_col, T.StringType()),
-        ]
-        if ingest.embedding_store_path is not None:
-            # The semantic gate reads a doc-embedding column the source
-            # must supply alongside the text.
-            fields.append(
-                T.StructField(
-                    ingest.embedding_col, T.ArrayType(T.DoubleType())
-                )
-            )
-        schema = T.StructType(fields)
-        ingest.start(
-            cfg["source_glob"], schema, max_files_per_trigger=mft
-        ).awaitTermination()
-        unpersist_all()
-        # An empty backlog (source glob matched no files) never runs a
-        # micro-batch, so the sink dir may not exist — a valid run that
-        # accepted 0 rows, not an error.
-        from pyspark.errors import AnalysisException
-
-        try:
-            n = spark.read.parquet(ingest.sink_path).count()
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            n = 0
-        print(_json.dumps({"mode": "dedup", "accepted_rows": n}))
-        return 0
-    if mode == "vector":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from .fsutil import hadoop_fs
-        from .operators.similarity import kmeans_centroids
-        from .streaming.vector_ingest import (
-            VectorIngest,
-            bootstrap_sq8_stats,
-            read_index_store,
-        )
-
-        allowed = {
-            "mode", "source_glob", "max_files_per_trigger",
-            "centroids_path", "store_path", "checkpoint_path", "id_col",
-            "vec_col", "dup_threshold", "sq8_stats_path",
-            "bootstrap_input", "n_cells", "dim", "search_queries",
-            "search_k", "search_n_probe",
-        }
-        unknown = set(cfg) - allowed
-        if unknown:
-            raise ValueError(f"unknown vector stream-config keys: {sorted(unknown)}")
-
-        def _missing(path: str) -> bool:
-            fs, jvm = hadoop_fs(spark, path)
-            return not fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-        id_col = cfg.get("id_col", "vec_id")
-        vec_col = cfg.get("vec_col", "embedding")
-        dim = int(cfg.get("dim", 64))
-        boot_src = cfg.get("bootstrap_input")
-        if boot_src:
-            boot = spark.read.parquet(boot_src).select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-            )
-            if _missing(cfg["centroids_path"]):
-                kmeans_centroids(
-                    boot,
-                    n_cells=int(cfg.get("n_cells", 16)),
-                    id_col=id_col,
-                    vec_col=vec_col,
-                ).write.parquet(cfg["centroids_path"])
-            if cfg.get("sq8_stats_path") and _missing(cfg["sq8_stats_path"]):
-                bootstrap_sq8_stats(
-                    boot, cfg["sq8_stats_path"], vec_col=vec_col, dim=dim
-                )
-        ingest = VectorIngest(
-            spark,
-            centroids_path=cfg["centroids_path"],
-            store_path=cfg["store_path"],
-            checkpoint_path=cfg["checkpoint_path"],
-            id_col=id_col,
-            vec_col=vec_col,
-            dup_threshold=float(cfg.get("dup_threshold", 0.995)),
-            sq8_stats_path=cfg.get("sq8_stats_path"),
-        )
-        schema = T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-            ]
-        )
-        ingest.start(
-            cfg["source_glob"], schema, max_files_per_trigger=mft
-        ).awaitTermination()
-        n = read_index_store(
-            spark,
-            cfg["store_path"],
-            id_col=id_col,
-            vec_col=vec_col,
-            quantized=cfg.get("sq8_stats_path") is not None,
-        ).count()
-        out = {"mode": "vector", "index_rows": n,
-               "quantized": cfg.get("sq8_stats_path") is not None}
-        if cfg.get("search_queries"):
-            queries = spark.read.parquet(cfg["search_queries"])
-            hits = ingest.search(
-                queries,
-                k=int(cfg.get("search_k", 5)),
-                n_probe=int(cfg.get("search_n_probe", 4)),
-            ).orderBy("query_id", "rank")
-            out["search"] = [
-                {"query_id": r["query_id"], "cand_id": r["cand_id"],
-                 "rank": r["rank"], "cosine_sim": r["cosine_sim"]}
-                for r in hits.collect()
-            ]
-        print(_json.dumps(out))
-        return 0
-    if mode == "hybrid":
-        from .streaming.bm25_ingest import Bm25IndexIngest
-        from .streaming.hybrid_search import hybrid_search_from_stores
-        from .streaming.vector_ingest import VectorIngest
-
-        allowed = {
-            "mode", "bm25_store_path", "vector_store_path",
-            "centroids_path", "sq8_stats_path", "search_terms",
-            "search_queries", "search_k", "search_bm25_k",
-            "search_ann_k", "search_n_probe", "rrf_k0", "id_col",
-            "vec_col", "bm25_n_buckets",
-        }
-        unknown = set(cfg) - allowed
-        if unknown:
-            raise ValueError(f"unknown hybrid stream-config keys: {sorted(unknown)}")
-        bm25 = Bm25IndexIngest(
-            spark,
-            store_path=cfg["bm25_store_path"],
-            # search-only open: no micro-batch runs, the checkpoint is
-            # never touched (and never created).
-            checkpoint_path=f"{cfg['bm25_store_path']}/_unused_ckpt",
-            n_buckets=int(cfg.get("bm25_n_buckets", 16)),
-        )
-        vec = VectorIngest(
-            spark,
-            centroids_path=cfg["centroids_path"],
-            store_path=cfg["vector_store_path"],
-            checkpoint_path=f"{cfg['vector_store_path']}/_unused_ckpt",
-            id_col=cfg.get("id_col", "vec_id"),
-            vec_col=cfg.get("vec_col", "embedding"),
-            sq8_stats_path=cfg.get("sq8_stats_path"),
-        )
-        terms = spark.read.parquet(cfg["search_terms"])
-        queries = spark.read.parquet(cfg["search_queries"])
-        fused = hybrid_search_from_stores(
-            bm25,
-            vec,
-            terms,
-            queries,
-            k=int(cfg.get("search_k", 10)),
-            k0=int(cfg.get("rrf_k0", 60)),
-            bm25_k=int(cfg.get("search_bm25_k", 10)),
-            ann_k=int(cfg.get("search_ann_k", 20)),
-            n_probe=int(cfg.get("search_n_probe", 4)),
-        ).orderBy("query_id", "rank")
-        out = {
-            "mode": "hybrid",
-            "search": [
-                {"query_id": r["query_id"], "cand_id": r["cand_id"],
-                 "rank": r["rank"], "rrf_score": r["rrf_score"]}
-                for r in fused.collect()
-            ],
-        }
-        print(_json.dumps(out))
-        return 0
-    if mode == "compact":
-        # Store maintenance, not a stream: fold committed epoch dirs of
-        # one gate family's store(s) into a single base dir so the
-        # per-batch/per-search dir listing stops growing with batch
-        # count. Run it OFFLINE (no stream draining the checkpoint) —
-        # the newest epoch is never folded, so a stopped stream's
-        # replay target survives. `target` picks the family; the other
-        # keys mirror that family's ingest mode.
-        target = cfg.get("target")
-        upto = int(cfg["upto_epoch"])
-        if target == "dedup":
-            from .streaming.dedup_ingest import DedupIngest
-
-            allowed = {
-                "mode", "target", "upto_epoch", "store_path", "id_col",
-                "num_hashes", "cdc_store_path", "cdc_n_buckets",
-                "cosine_store_path", "cosine_n_buckets",
-                "tile_store_path", "tile_n_buckets",
-                "embedding_store_path", "embedding_centroids_path",
-                "embedding_col", "embedding_sq8_stats_path",
-            }
-            unknown = set(cfg) - allowed
-            if unknown:
-                raise ValueError(
-                    f"unknown compact/dedup config keys: {sorted(unknown)}"
-                )
-            ingest = DedupIngest(
-                spark,
-                sink_path=f"{cfg['store_path']}/_unused_sink",
-                checkpoint_path=f"{cfg['store_path']}/_unused_ckpt",
-                **{k: v for k, v in cfg.items()
-                   if k not in ("mode", "target", "upto_epoch")},
-            )
-            folded = ingest.compact(upto)
-        elif target == "vector":
-            from .streaming.vector_ingest import VectorIngest
-
-            allowed = {
-                "mode", "target", "upto_epoch", "store_path",
-                "centroids_path", "id_col", "vec_col", "sq8_stats_path",
-            }
-            unknown = set(cfg) - allowed
-            if unknown:
-                raise ValueError(
-                    f"unknown compact/vector config keys: {sorted(unknown)}"
-                )
-            ingest = VectorIngest(
-                spark,
-                centroids_path=cfg["centroids_path"],
-                store_path=cfg["store_path"],
-                checkpoint_path=f"{cfg['store_path']}/_unused_ckpt",
-                id_col=cfg.get("id_col", "vec_id"),
-                vec_col=cfg.get("vec_col", "embedding"),
-                sq8_stats_path=cfg.get("sq8_stats_path"),
-            )
-            folded = {cfg["store_path"]: ingest.compact(upto)}
-        elif target == "bm25":
-            from .streaming.bm25_ingest import Bm25IndexIngest
-
-            allowed = {
-                "mode", "target", "upto_epoch", "store_path", "n_buckets",
-            }
-            unknown = set(cfg) - allowed
-            if unknown:
-                raise ValueError(
-                    f"unknown compact/bm25 config keys: {sorted(unknown)}"
-                )
-            bm25 = Bm25IndexIngest(
-                spark,
-                store_path=cfg["store_path"],
-                checkpoint_path=f"{cfg['store_path']}/_unused_ckpt",
-                n_buckets=int(cfg.get("n_buckets", 16)),
-            )
-            folded = {cfg["store_path"]: bm25.compact(upto)}
-        elif target == "asset":
-            from .streaming.asset_ingest import AssetIngest
-
-            allowed = {"mode", "target", "upto_epoch", "store_path"}
-            unknown = set(cfg) - allowed
-            if unknown:
-                raise ValueError(
-                    f"unknown compact/asset config keys: {sorted(unknown)}"
-                )
-            ingest = AssetIngest(
-                spark,
-                store_path=cfg["store_path"],
-                checkpoint_path=f"{cfg['store_path']}/_unused_ckpt",
-            )
-            folded = {cfg["store_path"]: ingest.compact(upto)}
-        else:
-            raise ValueError(
-                "compact config target must be 'dedup', 'vector', 'bm25' "
-                f"or 'asset', got {target!r}"
-            )
-        print(_json.dumps({"mode": "compact", "target": target,
-                           "upto_epoch": upto, "folded_dirs": folded}))
-        return 0
-    raise ValueError(
-        "stream config mode must be 'dedup', 'vector', 'hybrid' or "
-        f"'compact', got {mode!r}"
-    )
-
-
-if __name__ == "__main__":  # pragma: no cover
-    raise SystemExit(main_hosting())
+    with _session("cig-etl-stream") as spark:
+        print(json.dumps(_STREAM_MODES[mode](spark, cfg)))
+    return 0
 
 
 def main_corpus(argv: list[str] | None = None) -> int:
     """Corpus-preparation entry: run the composed training-data pipeline
     (exact dedup -> near dedup -> quality floor -> decontamination ->
     optional token budget -> chunking) over a parquet corpus and publish
-    the chunked output atomically via the manifest sink."""
-    import json as _json
-
+    the chunked output atomically via the manifest sink. The pipeline's
+    knobs are the ``CorpusPrepConfig`` fields the config sets."""
     parser = argparse.ArgumentParser(
         description="Prepare a document corpus for training per a JSON run config."
     )
@@ -626,60 +549,56 @@ def main_corpus(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
     with open(args.corpus_config_filename) as fh:
-        cfg_json = _json.load(fh)
+        cfg = json.load(fh)
 
-    from .plans.corpus_pipeline import CorpusPrepConfig, prepare_corpus
-    from .session import get_spark
+    from .plans.corpus_pipeline import (
+        CorpusPrepConfig,
+        prepare_corpus,
+        write_training_shards,
+    )
     from .sources.manifest_sink import write_snapshot
 
-    spark = get_spark(app_name="cig-etl-corpus")
-    docs = spark.read.parquet(cfg_json["input"])
-    benchmark = (
-        spark.read.parquet(cfg_json["benchmark"])
-        if cfg_json.get("benchmark")
-        else None
+    knobs = CorpusPrepConfig(
+        **{
+            f.name: cfg[f.name]
+            for f in dataclasses.fields(CorpusPrepConfig)
+            if f.name in cfg
+        }
     )
-    knobs = {
-        k: cfg_json[k]
-        for k in (
-            "minhash_threshold",
-            "quality_floor",
-            "contamination_max",
-            "chunk_size",
-            "chunk_overlap",
-            "id_col",
-            "text_col",
-            "canonical_by_quality",
-            "token_budget",
-            "frequent_segment_max",
-            "segment_k",
+    with _session("cig-etl-corpus") as spark:
+        docs = spark.read.parquet(cfg["input"])
+        benchmark = (
+            spark.read.parquet(cfg["benchmark"]) if cfg.get("benchmark") else None
         )
-        if k in cfg_json
-    }
-    if cfg_json.get("sharded"):
-        # Terminal-stage mode: deterministic shard + pack-bin assignment
-        # published EXACTLY-ONCE in waves (crash-resumable — rerunning
-        # this entry after a mid-write death completes only the missing
-        # shards; a completed run is a no-op).
-        from .plans.corpus_pipeline import write_training_shards
-
-        out = write_training_shards(
+        if cfg.get("sharded"):
+            # Terminal-stage mode: deterministic shard + pack-bin
+            # assignment published EXACTLY-ONCE in waves (crash-resumable
+            # — rerunning this entry after a mid-write death completes
+            # only the missing shards; a completed run is a no-op).
+            out = write_training_shards(
+                docs,
+                cfg["output"],
+                benchmark=benchmark,
+                cfg=knobs,
+                **_ints(
+                    cfg,
+                    n_shards="n_shards",
+                    bin_budget="bin_budget",
+                    shards_per_commit="shards_per_commit",
+                ),
+            )
+            print(json.dumps({"shards": out}))
+            return 0
+        chunks, stats = prepare_corpus(
             docs,
-            cfg_json["output"],
             benchmark=benchmark,
-            cfg=CorpusPrepConfig(**knobs),
-            n_shards=int(cfg_json.get("n_shards", 16)),
-            bin_budget=int(cfg_json.get("bin_budget", 256)),
-            shards_per_commit=int(cfg_json.get("shards_per_commit", 4)),
+            cfg=knobs,
+            with_stats=bool(cfg.get("stats", True)),
         )
-        print(_json.dumps({"shards": out}))
-        return 0
-    chunks, stats = prepare_corpus(
-        docs,
-        benchmark=benchmark,
-        cfg=CorpusPrepConfig(**knobs),
-        with_stats=bool(cfg_json.get("stats", True)),
-    )
-    version = write_snapshot(chunks, cfg_json["output"], mode="append")
-    print(_json.dumps({"output_version": version, "stats": stats}))
+        version = write_snapshot(chunks, cfg["output"], mode="append")
+    print(json.dumps({"output_version": version, "stats": stats}))
     return 0
+
+
+if __name__ == "__main__":  # pragma: no cover
+    raise SystemExit(main_hosting())

@@ -21,19 +21,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    from ..fsutil import hadoop_fs
-
-    fs, jvm = hadoop_fs(spark, path)
-    return fs, jvm.org.apache.hadoop.fs.Path(path), jvm
+from ..fsutil import hadoop_fs
 
 
 def directory_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) from FS metadata only."""
-    fs, hpath, _ = _fs(spark, path)
+    fs, jvm = hadoop_fs(spark, path)
     n, total = 0, 0
-    it = fs.listFiles(hpath, True)
+    it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
     while it.hasNext():
         st = it.next()
         name = st.getPath().getName()
@@ -55,17 +50,18 @@ def compact_parquet(
     n_out = max(1, math.ceil(total / target_file_bytes))
     if n_files < min_files_to_compact or n_out >= n_files:
         return 0
-    fs, hpath, jvm = _fs(spark, path)
+    fs, jvm = hadoop_fs(spark, path)
     staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._compacting")
     df = spark.read.parquet(path)
     df.repartition(n_out).write.mode("overwrite").parquet(staging.toString())
-    _swap_in(fs, jvm, path, hpath, staging)
+    _swap_in(fs, jvm, path, staging)
     return n_out
 
 
-def _swap_in(fs, jvm, path: str, hpath, staging) -> None:
+def _swap_in(fs, jvm, path: str, staging) -> None:
     """Swap ``staging`` into ``path`` with FS renames (atomic on
     HDFS/posix), rolling back on failure."""
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
     old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._prerewrite")
     if not fs.rename(hpath, old):
         raise IOError(f"layout swap failed for {path}")
@@ -91,10 +87,10 @@ def zorder_compact(
     if n_files == 0 or total == 0:
         return 0
     n_out = max(1, math.ceil(total / target_file_bytes))
-    fs, hpath, jvm = _fs(spark, path)
+    fs, jvm = hadoop_fs(spark, path)
     staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._zordering")
     zorder_write(spark.read.parquet(path), staging.toString(), cols, n_out, bits)
-    _swap_in(fs, jvm, path, hpath, staging)
+    _swap_in(fs, jvm, path, staging)
     return n_out
 
 
@@ -117,7 +113,6 @@ def zorder_snapshot(
     time-travelable until vacuumed."""
     import math as _math
 
-    from ..fsutil import hadoop_fs
     from ..sources.manifest_sink import (
         _latest_committed,
         read_snapshot,

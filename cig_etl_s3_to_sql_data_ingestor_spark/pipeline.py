@@ -100,12 +100,12 @@ class BatchIngest:
             self.environments,
             ledger,
             file_name=self.file_name,
-            source_col="environment" if self.layout == "hosting" else "data_source",
         )
         # Freeze the work-list before any marker mutation: the anti-join
         # reads the ledger, to which ledger.touch() appends in the loop.
+        # work_groups is the first action and scans every partition, so
+        # it fills the cache before the first touch.
         wl = wl.cache()
-        wl.count()
         by_source = {t.target_name: t for t in self.catalog.values()}
         self.results = []
         for g in work_groups(wl):
@@ -121,7 +121,7 @@ class BatchIngest:
                 self.spark,
                 data_root,
                 self.layout,
-                data_source if self.layout != "hosting" else env,
+                data_source,
                 g.entity_name,
                 g.min_date,
                 g.max_date,

@@ -40,14 +40,8 @@ def build_worklist(
     environments: list[str] | None = None,
     ledger: MarkerLedger | None = None,
     file_name: str | None = None,
-    source_col: str = "environment",
 ) -> DataFrame:
-    """Apply P5/P6/P2/P3/P4 (+ optional P9) and J4 to the file frame.
-
-    ``source_col`` is the P4 membership column: ``environment`` for the
-    hosting layout (`main.py:41-43`), ``data_source`` for the mailbox
-    layout (`main_mailbox.py:41-43` filters on DataSource — e.g.
-    'NL_Hosting_Mailbox' — not on the derived environment 'NL')."""
+    """Apply P5/P6/P2/P3/P4 (+ optional P9) and J4 to the file frame."""
     # First-match config semantics (`main.py:83-84`).
     cfg = config.dropDuplicates(["source"])
     out = files.join(
@@ -55,8 +49,10 @@ def build_worklist(
     ).drop("source")
     out = out.filter(F.col("is_enabled"))  # P2
     out = out.filter(F.col("backup_date") >= F.lit(ingestion_date))  # P3 late-data drop
-    if environments is not None:  # P4
-        out = out.filter(F.col(source_col).isin(environments))
+    if environments is not None:  # P4: hosting `main.py:41-43`, mailbox
+        # `main_mailbox.py:41-43` (the DataSource, not the derived
+        # environment); discover_files makes them one column.
+        out = out.filter(F.col("data_source").isin(environments))
     if file_name is not None:  # P9: debug single-file filter (`main.py:38-39`)
         out = out.filter(F.col("file_name") == file_name)
     if ledger is not None:  # J4

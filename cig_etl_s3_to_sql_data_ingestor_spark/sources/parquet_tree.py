@@ -26,6 +26,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import hadoop_fs
+
 HOSTING_GLOB = "environment=*/*/*/*/*/*.parquet"
 MAILBOX_GLOB = "*/*/*/*/*/*.parquet"
 
@@ -35,11 +37,8 @@ def _hadoop_glob(
 ) -> list[str]:
     """List matching paths via the JVM Hadoop FileSystem (driver-side
     metadata call; scales to object stores where os.walk cannot go)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = path.getFileSystem(conf)
-    statuses = fs.globStatus(path)
+    fs, jvm = hadoop_fs(spark, pattern)
+    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern))
     if statuses is None:
         return []
     return [
@@ -110,7 +109,9 @@ def discover_files(
     path-decoded partition columns (S3 of the reference).
 
     Columns: full_path, file_name, environment, data_source, entity_name,
-    backup_date.
+    backup_date. In the hosting layout ``data_source`` is the
+    environment, so source membership (P4) and a group's directory
+    prefix read ``data_source`` in either layout.
     """
     glob = HOSTING_GLOB if layout == "hosting" else MAILBOX_GLOB
     paths = _hadoop_glob(spark, root.rstrip("/") + "/" + glob)

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators import dedup as D
 from ..operators.text import bm25_build_index, bm25_search_indexed
 from ._store import (
     _compact_epoch_store,
@@ -173,11 +174,9 @@ class Bm25IndexIngest:
         # A compaction that crashed in its delete->rename window leaves
         # history only in the tmp dir; promote it before touching the store.
         self._recover()
-        # Persist the batch for the duration of the two writes — the
-        # postings and stats lineages would otherwise each re-read the
-        # epoch's source files.
-        batch_df = batch_df.persist()
-        try:
+        # The build persists its tokenized batch (both writes read it);
+        # release it, and only it, when the epoch ends.
+        with D.released_on_exit():
             # Replay of an ALREADY-COMMITTED epoch (crash after both
             # writes but before the checkpoint commit): un-commit first
             # — delete the stats witness BEFORE the postings overwrite
@@ -226,8 +225,6 @@ class Bm25IndexIngest:
             stats.write.mode("overwrite").parquet(
                 f"{self.store_path}/stats/epoch={epoch_id}"
             )
-        finally:
-            batch_df.unpersist()
 
     def start(
         self,

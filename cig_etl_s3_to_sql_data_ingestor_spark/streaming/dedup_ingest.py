@@ -823,104 +823,110 @@ class DedupIngest:
         # batch reads any store, or the gates classify against a store
         # missing all compacted admissions and re-admit their duplicates.
         recover_pending_compactions(self.spark, *self._store_roots())
-        # Excluding the current epoch makes a crash-replay of this
-        # epoch classify against exactly the store state the first
-        # attempt saw — replay-identical, so the epoch-dir overwrites
-        # are true no-ops instead of data loss.
-        _, survivors = self._classify(batch_df, exclude_epoch=epoch_id)
-        survivors.write.mode("overwrite").parquet(
-            f"{self.sink_path}/epoch={epoch_id}"
-        )
-        # READ BACK the survivors from the sink dir just written (the
-        # frequency monitor's delta pattern) instead of carrying the
-        # classification-join lineage into every store write below:
-        # classification is the batch's expensive stage and must run
-        # once, and the read-back frame is SCAN-ROOTED, so the signature
-        # stage's fan_out probes file splits instead of materializing
-        # the gate joins as a hidden extra job (the r9 .rdd-under-AQE
-        # hazard, caught here by the suite-armed tripwire).
-        survivors = self.spark.read.schema(batch_df.schema).parquet(
-            f"{self.sink_path}/epoch={epoch_id}"
-        )
-        # minhash_signatures projects down to (id, shingles, sig_*);
-        # keep only shingle DIGESTS (the store holds no raw text) and
-        # re-attach the content digest with a batch-sized join.
-        new_sigs = (
-            D.minhash_signatures(
-                survivors, self.id_col, self.text_col, self.num_hashes, self.shingle_n
+        # Release the frames this epoch's gates persist, and only those:
+        # other callers' cached frames in the session stay registered.
+        with D.released_on_exit():
+            # Excluding the current epoch makes a crash-replay of this
+            # epoch classify against exactly the store state the first
+            # attempt saw — replay-identical, so the epoch-dir overwrites
+            # are true no-ops instead of data loss.
+            _, survivors = self._classify(batch_df, exclude_epoch=epoch_id)
+            survivors.write.mode("overwrite").parquet(
+                f"{self.sink_path}/epoch={epoch_id}"
             )
-            .withColumn("shingles", D.shingle_digests_col(F.col("shingles")))
-            .join(
-                survivors.select(
-                    self.id_col, F.md5(F.col(self.text_col)).alias("content_hash")
-                ),
-                self.id_col,
+            # READ BACK the survivors from the sink dir just written (the
+            # frequency monitor's delta pattern) instead of carrying the
+            # classification-join lineage into every store write below:
+            # classification is the batch's expensive stage and must run
+            # once, and the read-back frame is SCAN-ROOTED, so the signature
+            # stage's fan_out probes file splits instead of materializing
+            # the gate joins as a hidden extra job (the r9 .rdd-under-AQE
+            # hazard, caught here by the suite-armed tripwire).
+            survivors = self.spark.read.schema(batch_df.schema).parquet(
+                f"{self.sink_path}/epoch={epoch_id}"
             )
-        )
-        # Column order must match the store schema read.
-        new_sigs.select(
-            [f.name for f in _store_schema(self.num_hashes, self.id_col).fields]
-        ).write.mode("overwrite").parquet(f"{self.store_path}/epoch={epoch_id}")
-        if self.cdc_store_path is not None:
-            # Distinct per epoch keeps the store minimal; a hash already
-            # present from an earlier epoch just adds one row (the gate
-            # only tests existence). Same epoch-addressed idempotent
-            # overwrite as the other two writes; rows land under
-            # bucket= partition dirs (crc32 % cdc_n_buckets, modulus
-            # stamped in a marker) so gate reads prune to the batch's
-            # chunk-hash buckets.
-            from .bm25_ingest import term_bucket_col
+            # minhash_signatures projects down to (id, shingles, sig_*);
+            # keep only shingle DIGESTS (the store holds no raw text) and
+            # re-attach the content digest with a batch-sized join.
+            new_sigs = (
+                D.minhash_signatures(
+                    survivors,
+                    self.id_col,
+                    self.text_col,
+                    self.num_hashes,
+                    self.shingle_n,
+                )
+                .withColumn("shingles", D.shingle_digests_col(F.col("shingles")))
+                .join(
+                    survivors.select(
+                        self.id_col, F.md5(F.col(self.text_col)).alias("content_hash")
+                    ),
+                    self.id_col,
+                )
+            )
+            # Column order must match the store schema read.
+            new_sigs.select(
+                [f.name for f in _store_schema(self.num_hashes, self.id_col).fields]
+            ).write.mode("overwrite").parquet(f"{self.store_path}/epoch={epoch_id}")
+            if self.cdc_store_path is not None:
+                # Distinct per epoch keeps the store minimal; a hash already
+                # present from an earlier epoch just adds one row (the gate
+                # only tests existence). Same epoch-addressed idempotent
+                # overwrite as the other two writes; rows land under
+                # bucket= partition dirs (crc32 % cdc_n_buckets, modulus
+                # stamped in a marker) so gate reads prune to the batch's
+                # chunk-hash buckets.
+                from .bm25_ingest import term_bucket_col
 
-            self._check_bucket_marker(
-                self.cdc_store_path, self.cdc_n_buckets, True, "cdc"
-            )
-            self._batch_chunks(survivors).select(
-                "chunk_hash"
-            ).distinct().select(
-                "chunk_hash",
-                term_bucket_col(
-                    F.col("chunk_hash"), self.cdc_n_buckets
-                ).alias("bucket"),
-            ).write.partitionBy("bucket").mode("overwrite").parquet(
-                f"{self.cdc_store_path}/epoch={epoch_id}"
-            )
-        if self.cosine_store_path is not None:
-            # Grow the cosine store from the survivors: TF postings,
-            # squared norms (UNfenced at write — the fence is a read-
-            # time verification bound, and norm_sq fits BIGINT for any
-            # doc a string column can hold), and this epoch's partial
-            # term doc-frequencies (summed across epochs at read time —
-            # df partials are associative, so the store never rewrites
-            # history). Postings and df land under bucket= partition
-            # dirs (crc32(term) % cosine_n_buckets, modulus stamped in
-            # a marker) so gate reads prune to the batch's vocabulary
-            # buckets. Same idempotent epoch-dir overwrite: a replay
-            # classifies against the store minus this epoch and
-            # rewrites identical content.
-            from .bm25_ingest import term_bucket_col
+                self._check_bucket_marker(
+                    self.cdc_store_path, self.cdc_n_buckets, True, "cdc"
+                )
+                self._batch_chunks(survivors).select(
+                    "chunk_hash"
+                ).distinct().select(
+                    "chunk_hash",
+                    term_bucket_col(
+                        F.col("chunk_hash"), self.cdc_n_buckets
+                    ).alias("bucket"),
+                ).write.partitionBy("bucket").mode("overwrite").parquet(
+                    f"{self.cdc_store_path}/epoch={epoch_id}"
+                )
+            if self.cosine_store_path is not None:
+                # Grow the cosine store from the survivors: TF postings,
+                # squared norms (UNfenced at write — the fence is a read-
+                # time verification bound, and norm_sq fits BIGINT for any
+                # doc a string column can hold), and this epoch's partial
+                # term doc-frequencies (summed across epochs at read time —
+                # df partials are associative, so the store never rewrites
+                # history). Postings and df land under bucket= partition
+                # dirs (crc32(term) % cosine_n_buckets, modulus stamped in
+                # a marker) so gate reads prune to the batch's vocabulary
+                # buckets. Same idempotent epoch-dir overwrite: a replay
+                # classifies against the store minus this epoch and
+                # rewrites identical content.
+                from .bm25_ingest import term_bucket_col
 
-            self._check_cosine_n_buckets(create=True)
-            sp = self.cosine_store_path
-            tf_s = D._persist(self._cosine_tf(survivors))
-            bucket = term_bucket_col(F.col("term"), self.cosine_n_buckets)
-            tf_s.select(
-                self.id_col, "term", "tf", bucket.alias("bucket")
-            ).write.partitionBy("bucket").mode("overwrite").parquet(
-                f"{sp}/postings/epoch={epoch_id}"
-            )
-            tf_s.groupBy(self.id_col).agg(
-                F.sum(F.col("tf") * F.col("tf")).alias("norm_sq")
-            ).write.mode("overwrite").parquet(f"{sp}/norms/epoch={epoch_id}")
-            tf_s.groupBy("term").agg(F.count("*").alias("df")).select(
-                "term", "df", bucket.alias("bucket")
-            ).write.partitionBy("bucket").mode("overwrite").parquet(
-                f"{sp}/df/epoch={epoch_id}"
-            )
-        if self.tile_store_path is not None:
-            self._write_tile_store(survivors, epoch_id)
-        if self.embedding_store_path is not None:
-            self._write_embedding_store(survivors, epoch_id)
-        D.unpersist_all()
+                self._check_cosine_n_buckets(create=True)
+                sp = self.cosine_store_path
+                tf_s = D._persist(self._cosine_tf(survivors))
+                bucket = term_bucket_col(F.col("term"), self.cosine_n_buckets)
+                tf_s.select(
+                    self.id_col, "term", "tf", bucket.alias("bucket")
+                ).write.partitionBy("bucket").mode("overwrite").parquet(
+                    f"{sp}/postings/epoch={epoch_id}"
+                )
+                tf_s.groupBy(self.id_col).agg(
+                    F.sum(F.col("tf") * F.col("tf")).alias("norm_sq")
+                ).write.mode("overwrite").parquet(f"{sp}/norms/epoch={epoch_id}")
+                tf_s.groupBy("term").agg(F.count("*").alias("df")).select(
+                    "term", "df", bucket.alias("bucket")
+                ).write.partitionBy("bucket").mode("overwrite").parquet(
+                    f"{sp}/df/epoch={epoch_id}"
+                )
+            if self.tile_store_path is not None:
+                self._write_tile_store(survivors, epoch_id)
+            if self.embedding_store_path is not None:
+                self._write_embedding_store(survivors, epoch_id)
 
     def _check_bucket_marker(self, root: str, n: int, create: bool, what: str) -> None:
         check_store_marker(self.spark, root, "n_buckets", n, create, what)

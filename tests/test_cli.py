@@ -717,3 +717,136 @@ def test_cli_stream_dedup_embedding_gate(spark, tmp_path):
     out2 = json.loads(buf2.getvalue().strip().splitlines()[-1])
     assert out2["folded_dirs"][cfg["embedding_store_path"]] == 2
     assert len(_glob.glob(str(tmp_path / "emb" / "epoch=*"))) == 2
+
+
+def test_cli_stream_compact_accepts_family_ingest_keys(spark, tmp_path):
+    """A compact config may carry the rest of its family's ingest keys
+    (the gate dataclass fields: dedup ``threshold``, bm25 ``text_col``);
+    compaction ignores them, and a key that is no field still raises."""
+    import contextlib
+    import io as _io
+    import json
+
+    import pytest as _pytest
+
+    from cig_etl_s3_to_sql_data_ingestor_spark.cli import main_stream
+    from cig_etl_s3_to_sql_data_ingestor_spark.streaming.bm25_ingest import (
+        Bm25IndexIngest,
+    )
+    from cig_etl_s3_to_sql_data_ingestor_spark.streaming.dedup_ingest import (
+        DedupIngest,
+    )
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "pack my box with five dozen liquor jugs today",
+        "a genuinely novel document about streaming ingest gates",
+    ]
+    dedup = DedupIngest(
+        spark,
+        store_path=str(tmp_path / "store"),
+        sink_path=str(tmp_path / "accepted"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+    )
+    bm25 = Bm25IndexIngest(
+        spark,
+        store_path=str(tmp_path / "bm25"),
+        checkpoint_path=str(tmp_path / "bm25_ckpt"),
+    )
+    for epoch, text in enumerate(texts):
+        batch = spark.createDataFrame([(epoch, text)], "doc_id long, text string")
+        dedup._process_batch(batch, epoch)
+        bm25._process_batch(batch, epoch)
+
+    def compact(cfg):
+        path = tmp_path / "compact_config.json"
+        path.write_text(json.dumps(cfg))
+        buf = _io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            assert main_stream(["--stream_config_filename", str(path)]) == 0
+        return json.loads(buf.getvalue().strip().splitlines()[-1])["folded_dirs"]
+
+    dedup_cfg = {
+        "mode": "compact",
+        "target": "dedup",
+        "upto_epoch": 1,
+        "store_path": str(tmp_path / "store"),
+        "sink_path": str(tmp_path / "accepted"),
+        "threshold": 0.4,
+        "shingle_n": 3,
+    }
+    assert compact(dedup_cfg) == {str(tmp_path / "store"): 2}
+    bm25_cfg = {
+        "mode": "compact",
+        "target": "bm25",
+        "upto_epoch": 1,
+        "store_path": str(tmp_path / "bm25"),
+        "text_col": "text",
+        "id_col": "doc_id",
+    }
+    assert compact(bm25_cfg) == {str(tmp_path / "bm25"): 2}
+    with _pytest.raises(ValueError, match="unknown compact/bm25"):
+        compact(dict(bm25_cfg, source_glob="ingest-only run key"))
+
+
+def test_main_corpus_keeps_active_session_conf(spark, tmp_path):
+    """The corpus entry runs in the caller's active session as it is: it
+    must not re-apply the engine's builder conf over the session's own
+    runtime SQL settings."""
+    import contextlib
+    import io as _io
+    import json
+
+    from cig_etl_s3_to_sql_data_ingestor_spark.cli import main_corpus
+
+    docs = tmp_path / "docs.parquet"
+    spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog again and again"),
+            (2, "pack my box with five dozen liquor jugs before the night ends"),
+        ],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(str(docs))
+    cfg_path = tmp_path / "corpus_config.json"
+    cfg_path.write_text(
+        json.dumps(
+            {"input": str(docs), "output": str(tmp_path / "out"), "stats": False}
+        )
+    )
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        spark.conf.set("spark.sql.session.timeZone", "Europe/Amsterdam")
+        with contextlib.redirect_stdout(_io.StringIO()):
+            assert main_corpus(["--corpus_config_filename", str(cfg_path)]) == 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert spark.conf.get("spark.sql.session.timeZone") == "Europe/Amsterdam"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def test_cli_gates_and_sessions_have_one_home():
+    """Each console entry takes its session from ``_session`` and each
+    streaming gate is built from its dataclass: no entry resolves a
+    session itself, the hybrid mode's prefixed key set is the only
+    hand-kept one, and no gate default is restated."""
+    import ast
+
+    from cig_etl_s3_to_sql_data_ingestor_spark import cli
+
+    src = open(cli.__file__).read()
+    session_fn = next(
+        n
+        for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_session"
+    )
+    inside = range(session_fn.lineno, session_fn.end_lineno + 1)
+    for name in ("getActiveSession", "get_spark"):
+        lines = [
+            i for i, line in enumerate(src.splitlines(), 1) if name in line
+        ]
+        assert lines and all(i in inside for i in lines), (name, lines)
+    assert src.count("allowed = {") == 1
+    assert "0.995" not in src and '"vec_id"' not in src

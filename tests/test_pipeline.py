@@ -398,3 +398,20 @@ def test_semi_join_paths_survive_special_characters(spark, tmp_path):
         .join(wl, F.col("_src_path") == F.col("_wl_path"), "left_semi")
     )
     assert df.count() == 3, "special-character paths must survive the semi-join"
+
+
+def test_batch_ingest_noop_run_launches_few_jobs(spark, tree, tmp_path):
+    """A run with nothing left to ingest costs discovery, the work-list
+    plan and its group collect; the group collect is the action that
+    fills the cached work-list, so no extra count over it runs."""
+    ingest = BatchIngest(
+        spark=spark,
+        catalog={"Widgets": SPEC, "Off": DISABLED},
+        sink_root=str(tmp_path / "sink"),
+        marker_path=str(tmp_path / "marker"),
+    )
+    assert ingest.run(tree, dt.date(2024, 1, 4))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.nextJobId()
+    assert ingest.run(tree, dt.date(2024, 1, 4)) == []
+    assert scheduler.nextJobId() - jobs <= 5
